@@ -38,10 +38,13 @@ object Graft {
     * When the session conf `spark.graft.queue` names a defined WLM queue,
     * every statement routes through its admission control automatically —
     * the reference passes ALL queries through the resource scheduler, not
-    * only opt-in ones. DDL/DML commands execute (and release their slot)
-    * inside admission; a lazy SELECT holds its slot until its first
-    * completed action, so the expensive execution — not just planning — is
-    * throttled (Queues.admitLazy).
+    * only opt-in ones. The slot belongs to the statement's entry in the
+    * running-statement ledger (engine.RunningQueries) and is released when
+    * the entry retires: DDL/DML commands at once (they executed inside
+    * admission), a lazy SELECT on its first completed action, so the
+    * expensive execution — not just planning — is throttled. The same
+    * ledger is where `CANCEL QUERY` and REST cancel apply one
+    * owner-or-admin rule while auth enforcement is on.
     *
     * With no explicit queue named and `spark.graft.queue.auto=true`, the
     * statement is routed BY ESTIMATED COST the way the reference's basic
@@ -176,23 +179,15 @@ object Graft {
       s"cannot render a SQL literal for parameter type ${other.getClass.getName}")
   }
 
-  /** The statement wrapper both entries share: jobs-ledger tracking +
-    * WLM queue routing (explicit conf, then rules, then cost). */
+  /** The statement wrapper both entries share: WLM queue routing
+    * (explicit conf, then rules, then cost), then admission and tracking
+    * in the running-statement ledger. */
   private def managed(spark: SparkSession, query: String)
-                     (body: => DataFrame): DataFrame =
-    graft.engine.RunningQueries.tracked(spark, query) {
-      // every statement surface probes the plan cache (reference: the
-      // NormalHandler plan-cache probe precedes planning for all queries)
-      def run = body
-      spark.conf.getOption(QueueConf).filter(_.nonEmpty) match {
-        case Some(queue) => graft.engine.Queues.admitLazy(spark, queue)(run)
-        case None =>
-          routeByRule(spark, query).orElse(autoQueue(spark, query)) match {
-            case Some(queue) => graft.engine.Queues.admitLazy(spark, queue)(run)
-            case None => run
-          }
-      }
-    }
+                     (body: => DataFrame): DataFrame = {
+    val queue = spark.conf.getOption(QueueConf).filter(_.nonEmpty)
+      .orElse(routeByRule(spark, query)).orElse(autoQueue(spark, query))
+    graft.engine.RunningQueries.tracked(spark, query, queue)(body)
+  }
 
   /** Rule-based queue choice (reference `RuleBasedEngineSelector.java:22`
     * — evaluated before the cost fallback, the way the reference consults

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTimestampLike, LocalTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Statement plan cache: a repeated SQL text on the same session skips
   * parse + analysis + optimization + physical planning by reusing the
@@ -182,9 +181,9 @@ object PlanCache {
       case Some(e) if fresh(spark, e) =>
         hitCount.incrementAndGet(); e.hits.incrementAndGet()
         e.lastUsed.set(tick.incrementAndGet())
-        // rebound to the CALLING session: QueryExecutionListeners (WLM
-        // slot release, running-queries retirement) are delivered only
-        // for executions owned by the listener's session
+        // rebound to the CALLING session: QueryExecutionListeners (query
+        // history) are delivered only for executions owned by the
+        // listener's session
         return org.apache.spark.sql.graft.Bridge.datasetOf(spark, e.qe, e.enc)
       case stale =>
         stale.foreach(e => cache.remove(e.key, e))
@@ -204,7 +203,7 @@ object PlanCache {
       case p if p.isStreaming || uncacheable(p) => ()
       case p if !enabled => ()
       case p =>
-        val pins = lakePins(p)
+        val pins = Reflections.lakePins(p)
         if (pins.isEmpty || Reflections.versionsCurrent(spark, pins)) {
           val now = tick.incrementAndGet()
           val (qe, enc) = org.apache.spark.sql.graft.Bridge.planArtifact(df)
@@ -225,20 +224,6 @@ object PlanCache {
     e.epochAt == epoch.get &&
       Reflections.versionsCurrent(spark, e.pins) &&
       e.tempViews.forall { case (parts, id) => rawViewId(spark, parts) == id }
-
-  /** (lake dir -> snapshot version) pinned by each lake scan in the plan
-    * (same extraction as the result cache's key). */
-  private def lakePins(plan: LogicalPlan): Map[String, Long] =
-    (plan +: plan.subqueriesAll).flatMap(_.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case lfi: graft.sources.LakeFileIndex if lfi.snapshotVersion >= 0 =>
-            Seq(Reflections.normPath(lfi.tableDirPath) -> lfi.snapshotVersion)
-          case _ => Nil
-        }
-        case _ => Nil
-      }
-    }.flatten).toMap
 
   /** Marks a Literal whose value was folded from a live filesystem
     * listing at analysis time (MAXDIR/MINDIR family): the plan is

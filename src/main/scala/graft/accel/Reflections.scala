@@ -108,8 +108,10 @@ object Reflections {
     // optimizer's fixed point):
     //  - LocalRelation prints only its schema, not its rows;
     //  - LogicalRelation prints "Relation [cols] parquet" without the PATH.
-    // Fold both identities into the digest.
-    canon.foreach {
+    // Fold both identities into the digest — for subquery plans too: the
+    // rendering prints a subquery's shape but not its relations' paths.
+    val plans = canon +: canon.subqueriesAll
+    plans.foreach(_.foreach {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         sb.append('#').append(lr.data.hashCode())
       case rel: LogicalRelation =>
@@ -120,20 +122,20 @@ object Reflections {
           case other => sb.append('@').append(other.toString)
         }
       case _ =>
-    }
+    })
     // Third blind spot: SQLScalarFunction (a SQL-defined UDF call) renders
     // only `name(inputs)` — its analyzed BODY rides in `child` and never
     // prints. Two plans calling the same UDF whose bodies folded
     // differently (graft_principal() → per-principal literal, policy
     // views) would share a rendering — and the result cache would serve
     // one principal's rows to another. Fold every body into the digest.
-    canon.foreach { n =>
+    plans.foreach(_.foreach { n =>
       n.expressions.foreach(_.foreach {
         case s: org.apache.spark.sql.catalyst.analysis.SQLScalarFunction =>
           sb.append('$').append(s.child.toString)
         case _ =>
       })
-    }
+    })
     java.security.MessageDigest.getInstance("MD5")
       .digest(sb.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
@@ -804,6 +806,21 @@ object Reflections {
     * fingerprint), so it is safe under the optimizer's fixed-point batch. */
   private[graft] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/").stripSuffix("/")
+
+  /** (lake dir -> snapshot version) pinned by each lake scan in the plan,
+    * subqueries included — the one pin walk behind the plan cache, the
+    * result cache and their freshness checks. */
+  private[graft] def lakePins(plan: LogicalPlan): Map[String, Long] =
+    (plan +: plan.subqueriesAll).flatMap(_.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case lfi: graft.sources.LakeFileIndex if lfi.snapshotVersion >= 0 =>
+            Seq(normPath(lfi.tableDirPath) -> lfi.snapshotVersion)
+          case _ => Nil
+        }
+        case _ => Nil
+      }
+    }.flatten).toMap
 
   /** Are all pinned lake versions still the table's latest? (shared
     * freshness rule: reflections staleness gate + result-cache eviction —

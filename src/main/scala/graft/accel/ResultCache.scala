@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
 /** Query result cache: serve a repeated query from its previously
@@ -63,16 +62,7 @@ object ResultCache {
     *  lake dir -> pinned snapshot version). */
   private def keyOf(df: DataFrame): (String, Map[String, Long]) = {
     val plan = df.queryExecution.analyzed
-    val pins: Map[String, Long] = plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case lfi: graft.sources.LakeFileIndex if lfi.snapshotVersion >= 0 =>
-            Seq(Reflections.normPath(lfi.tableDirPath) -> lfi.snapshotVersion)
-          case _ => Nil
-        }
-        case _ => Nil
-      }
-    }.flatten.toMap
+    val pins = Reflections.lakePins(plan)
     val sb = new StringBuilder(Reflections.fingerprintPlan(plan))
     sb.append('|').append(plan.output.map(_.name).mkString(","))
     pins.toSeq.sorted.foreach { case (d, v) => sb.append('|').append(d).append('#').append(v) }

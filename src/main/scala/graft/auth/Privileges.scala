@@ -226,6 +226,21 @@ object Privileges {
     tok
   }
 
+  /** Log `spark` in with the credentials of an `Authorization: Basic`
+    * header (the REST and Flight wires share this decoder). None when the
+    * header is absent or not Basic; otherwise the token. Throws
+    * IllegalArgumentException for a malformed payload and
+    * SecurityException for wrong credentials. */
+  def loginBasic(spark: SparkSession, header: String): Option[String] =
+    if (header == null || !header.regionMatches(true, 0, "Basic ", 0, 6)) None
+    else {
+      val raw = new String(java.util.Base64.getDecoder.decode(header.substring(6).trim),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val i = raw.indexOf(':')
+      if (i < 0) throw new IllegalArgumentException("malformed basic credentials")
+      Some(login(spark, raw.substring(0, i), raw.substring(i + 1)))
+    }
+
   /** The session's AUTHENTICATED principal, or None. */
   def principalOf(spark: SparkSession): Option[User] =
     spark.conf.getOption(TokenConf).flatMap(t => Option(tokens.get(t)))

@@ -66,8 +66,7 @@ object Parallelism {
         // inputs (checkpointed RDDs, local relations) keep the full
         // parallelism target. The conf parameterizes the floor for other
         // deployments; at 100 TB the gate below still never fires.
-        val maxT = math.min(spark.sparkContext.defaultParallelism,
-          spark.conf.get("spark.graft.spreadCap", Int.MaxValue.toString).toInt)
+        val maxT = spark.sparkContext.defaultParallelism
         val perTask =
           spark.conf.get("spark.graft.spreadBytesPerTask", (64 * 1024).toString).toLong
         val target = bytes match {

@@ -1,11 +1,9 @@
 package graft.engine
 
-import java.util.concurrent.{ConcurrentLinkedQueue, Semaphore, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.{Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.SparkSession
 
 /** Workload management: named admission queues with bounded concurrency
   * and an enqueue timeout, mapped onto Spark's scheduler pools.
@@ -24,6 +22,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the admitted action, so the cluster shares resources between queues the
   * way the reference shares slices between its queues. Everything is
   * driver-side metadata: zero cost in the data plane.
+  *
+  * This object only grants and counts slots. A `Graft.sql` statement's
+  * slot is a field of its [[RunningQueries]] ledger entry: the retirement
+  * that drops the entry also releases the slot.
   */
 object Queues {
 
@@ -101,12 +103,16 @@ object Queues {
 
   def listEngines: Seq[EngineDef] = engines.values.toSeq.sortBy(_.name)
 
-  /** Run `body` under the queue's admission control: blocks for a slot
-    * (FIFO, up to timeoutMs), tags the calling thread's jobs with the
-    * queue's scheduler pool, and releases the slot when the body returns
-    * or throws. Queries on threads that never go through `run` are
-    * unmanaged — same as the reference with queueing disabled. */
-  def run[T](spark: SparkSession, queueName: String)(body: => T): T = {
+  /** A granted admission slot; its holder releases it exactly once. */
+  final class Slot private[Queues] (st: State) {
+    /** Spark fair-scheduler pool the admitted statement runs in. */
+    def pool: String = st.defn.pool
+    def release(): Unit = { st.running.decrementAndGet(); st.sem.release() }
+  }
+
+  /** Block for a slot in the queue (FIFO, up to its timeoutMs). Throws
+    * AdmissionTimeout when none frees in time. */
+  def acquire(queueName: String): Slot = {
     val st = states.getOrElse(queueName,
       throw new NoSuchElementException(s"no such queue: $queueName"))
     val q = st.queued.incrementAndGet()
@@ -120,107 +126,26 @@ object Queues {
     }
     st.admitted.incrementAndGet()
     st.running.incrementAndGet()
+    new Slot(st)
+  }
+
+  /** Run `body` under the queue's admission control: blocks for a slot,
+    * tags the calling thread's jobs with the queue's scheduler pool, and
+    * releases the slot when the body returns or throws. `Graft.sql`
+    * statements are admitted by [[RunningQueries.tracked]] instead, which
+    * holds a lazy statement's slot until its first action completes.
+    * Queries on threads that go through neither are unmanaged — same as
+    * the reference with queueing disabled. */
+  def run[T](spark: SparkSession, queueName: String)(body: => T): T = {
+    val slot = acquire(queueName)
     val sc = spark.sparkContext
     val prevPool = sc.getLocalProperty("spark.scheduler.pool")
-    sc.setLocalProperty("spark.scheduler.pool", st.defn.pool)
+    sc.setLocalProperty("spark.scheduler.pool", slot.pool)
     try body
     finally {
       sc.setLocalProperty("spark.scheduler.pool", prevPool)
-      st.running.decrementAndGet()
-      st.sem.release()
+      slot.release()
     }
-  }
-
-  // ---------- lazy-statement admission (slot held until first action) ----
-
-  private final case class PendingLazy(ref: java.lang.ref.WeakReference[AnyRef],
-                                       dfRef: java.lang.ref.WeakReference[AnyRef],
-                                       released: AtomicBoolean,
-                                       release: () => Unit,
-                                       listener: QueryExecutionListener)
-  private val pendingLazy = new ConcurrentLinkedQueue[PendingLazy]
-
-  /** Failsafe against slot leaks: a lazy statement whose DataFrame was
-    * abandoned without ever running holds no strong reference anywhere once
-    * the caller drops it (the listener only holds WeakReferences), so the
-    * next admission through any queue reaps cleared entries and frees their
-    * slots. Abandonment keys on the caller-owned DATASET, not the analyzed
-    * plan — the plan cache may strongly hold the plan long after every
-    * caller dropped their handle. Also prunes entries already released by
-    * their listener. */
-  private def reapAbandoned(spark: SparkSession): Unit = {
-    val it = pendingLazy.iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.dfRef.get == null || p.released.get()) {
-        p.release() // idempotent
-        spark.listenerManager.unregister(p.listener)
-        it.remove()
-      }
-    }
-  }
-
-  /** Admission for a LAZY statement (ADVICE r6): [[run]] releases the slot
-    * when `body` returns, which for a SELECT is before any job runs — the
-    * expensive execution would be unthrottled. Here the slot (and the
-    * queue's scheduler pool, left set on the calling thread for the
-    * statement's lifetime) is held from submission until the statement's
-    * first completed action, detected by a one-shot QueryExecutionListener
-    * keyed on the frame's analyzed plan (actions like head()/count() wrap
-    * the plan, so the match is containment by reference, not equality).
-    * Eagerly-executed commands (DDL/DML — the plan is a Command /
-    * CommandResult) already ran inside admission and release immediately,
-    * preserving [[run]]'s semantics for them. */
-  def admitLazy(spark: SparkSession, queueName: String)(body: => DataFrame): DataFrame = {
-    reapAbandoned(spark)
-    val st = states.getOrElse(queueName,
-      throw new NoSuchElementException(s"no such queue: $queueName"))
-    val q = st.queued.incrementAndGet()
-    st.peakQueued.getAndUpdate(p => math.max(p, q))
-    val got =
-      try st.sem.tryAcquire(st.defn.timeoutMs, TimeUnit.MILLISECONDS)
-      finally st.queued.decrementAndGet()
-    if (!got) {
-      st.timedOut.incrementAndGet()
-      throw new AdmissionTimeout(queueName, st.defn.timeoutMs)
-    }
-    st.admitted.incrementAndGet()
-    st.running.incrementAndGet()
-    val released = new AtomicBoolean(false)
-    def release(): Unit = if (released.compareAndSet(false, true)) {
-      st.running.decrementAndGet(); st.sem.release()
-    }
-    val df =
-      try {
-        // pool tag for the statement's lifetime: the caller's later actions
-        // on this thread schedule into the queue's pool (execution-side WLM)
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", st.defn.pool)
-        body
-      } catch { case t: Throwable => release(); throw t }
-    import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult}
-    val analyzed = df.queryExecution.analyzed
-    val alreadyRan = analyzed.isInstanceOf[Command] ||
-      analyzed.isInstanceOf[CommandResult] ||
-      df.queryExecution.logical.isInstanceOf[Command]
-    if (alreadyRan) release()
-    else {
-      val planRef = new java.lang.ref.WeakReference[AnyRef](analyzed)
-      val listener: QueryExecutionListener = new QueryExecutionListener {
-        private def hit(qe: QueryExecution): Boolean = {
-          val p = planRef.get
-          p != null && qe.analyzed.exists(_ eq p)
-        }
-        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          if (hit(qe)) { release(); spark.listenerManager.unregister(this) }
-        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-          if (hit(qe)) { release(); spark.listenerManager.unregister(this) }
-      }
-      spark.listenerManager.register(listener)
-      pendingLazy.add(PendingLazy(planRef,
-        new java.lang.ref.WeakReference[AnyRef](df), released,
-        () => release(), listener))
-    }
-    df
   }
 
   // ---- rule-based routing (reference `RuleBasedEngineSelector.java:22`:

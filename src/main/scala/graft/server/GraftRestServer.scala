@@ -621,22 +621,15 @@ object GraftRestServer {
     else Option(ex.getRequestHeaders.getFirst("Authorization")) match {
       case None => Left(401 ->
         "this endpoint requires Authorization: Basic while auth enforcement is on")
-      case Some(h) if h.regionMatches(true, 0, "Basic ", 0, 6) =>
+      case Some(h) =>
         try {
-          val raw = new String(java.util.Base64.getDecoder
-            .decode(h.substring(6).trim), StandardCharsets.UTF_8)
-          val i = raw.indexOf(':')
-          if (i < 0) Left(401 -> "malformed basic credentials")
-          else {
-            val s = root.newSession()
-            p.login(s, raw.substring(0, i), raw.substring(i + 1))
-            p.principalOf(s) match {
-              case Some(u) => Right(Some(u))
-              case None => Left(401 -> "invalid basic credentials")
-            }
+          val s = root.newSession()
+          p.loginBasic(s, h).map(_ => p.principalOf(s)) match {
+            case None => Left(401 -> "unsupported authorization scheme (Basic only)")
+            case Some(Some(u)) => Right(Some(u))
+            case Some(None) => Left(401 -> "invalid basic credentials")
           }
         } catch { case e: Exception => Left(401 -> e.getMessage.take(300)) }
-      case Some(_) => Left(401 -> "unsupported authorization scheme (Basic only)")
     }
   }
 
@@ -1001,43 +994,29 @@ object GraftRestServer {
           .stripPrefix("/").split("/").filter(_.nonEmpty)
         if (ex.getRequestMethod == "POST") parts0 match {
           case Array(id, "cancel") =>
-            // while auth enforcement is on, killing a statement needs an
-            // authenticated principal — admin, or the statement's owner
-            // (same optional body credentials the /sql route takes);
-            // without it any client reaching the port could kill any job
+            // while auth enforcement is on, the caller binds credentials
+            // (same optional body fields the /sql route takes); the
+            // owner-or-admin rule itself is RunningQueries.cancel's
             val body = new String(ex.getRequestBody.readAllBytes(),
               StandardCharsets.UTF_8)
-            val denial: Option[(Int, String)] =
-              if (!graft.auth.Privileges.enforcing) None
-              else {
-                val user = jsonField(body, "user")
-                val password = jsonField(body, "password")
-                user match {
-                  case None => Some(401 ->
-                    "cancel requires credentials while auth enforcement is on")
-                  case Some(u) =>
-                    try {
-                      val s = spark.newSession()
-                      graft.auth.Privileges.login(s, u, password.getOrElse(""))
-                      val p = graft.auth.Privileges.principalOf(s)
-                      val target = graft.engine.RunningQueries.list
-                        .find(_.id == id.toLong)
-                      val owns = target.exists(_.owner.exists(_.equalsIgnoreCase(u)))
-                      // unknown id falls through to cancel's 404
-                      if (p.exists(_.admin) || owns || target.isEmpty) None
-                      else Some(403 ->
-                        s"user '$u' is neither admin nor the owner of query $id")
-                    } catch {
-                      case e: Exception => Some(401 -> e.getMessage.take(300))
-                    }
-                }
+            val caller: Either[(Int, String), SparkSession] =
+              if (!graft.auth.Privileges.enforcing) Right(spark)
+              else jsonField(body, "user") match {
+                case None => Left(401 ->
+                  "cancel requires credentials while auth enforcement is on")
+                case Some(u) =>
+                  try {
+                    val s = spark.newSession()
+                    graft.auth.Privileges.login(s, u,
+                      jsonField(body, "password").getOrElse(""))
+                    Right(s)
+                  } catch { case e: Exception => Left(401 -> e.getMessage.take(300)) }
               }
-            denial match {
-              case Some((code, msg)) => respond(ex, code, error(msg))
-              case None =>
-                val ok = graft.engine.RunningQueries.cancel(spark, id.toLong)
-                if (ok) respond(ex, 200, s"""{"cancelled":$id}""")
-                else respond(ex, 404, error(s"no running query $id"))
+            caller.flatMap(s => graft.engine.RunningQueries.cancel(s, id.toLong)
+                .left.map(403 -> _)) match {
+              case Left((code, msg)) => respond(ex, code, error(msg))
+              case Right(true) => respond(ex, 200, s"""{"cancelled":$id}""")
+              case Right(false) => respond(ex, 404, error(s"no running query $id"))
             }
           case _ => respond(ex, 405, error("POST supports /jobs/<id>/cancel only"))
         }

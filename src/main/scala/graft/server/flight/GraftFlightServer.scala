@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.channels.Channels
-import java.util.Base64
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.sparkproject.connect.grpc
@@ -79,17 +78,8 @@ object GraftFlightServer {
   /** Validate Basic credentials and mint a bearer token (global token
     * table), or None when the header is not Basic / invalid. */
   private def mintBearer(root: SparkSession, header: String): Option[String] =
-    if (header == null || !header.regionMatches(true, 0, "Basic ", 0, 6)) None
-    else {
-      val raw = new String(Base64.getDecoder.decode(header.substring(6).trim),
-        StandardCharsets.UTF_8)
-      val i = raw.indexOf(':')
-      if (i < 0) None
-      else
-        try Some(graft.auth.Privileges.login(root.newSession(),
-          raw.substring(0, i), raw.substring(i + 1)))
-        catch { case _: SecurityException => None }
-    }
+    try graft.auth.Privileges.loginBasic(root.newSession(), header)
+    catch { case _: SecurityException | _: IllegalArgumentException => None }
 
   /** Bind the caller's principal (Basic or Bearer header) onto `session`.
     * Throws UNAUTHENTICATED for a present-but-invalid header, or for a

@@ -1518,11 +1518,16 @@ object GraftSqlParser {
     * jobs-service cancel, `LocalJobsService.java:3060` — routed to the
     * foreman's requestCancelQuery; here: kill the statement's job group).
     * Returns whether anything was cancelled — false mirrors the
-    * reference's not-found ack for finished/unknown jobs. */
+    * reference's not-found ack for finished/unknown jobs. While auth
+    * enforcement is on, a caller who is neither admin nor the statement's
+    * owner is refused with a SecurityException (RunningQueries.cancel). */
   case class CancelQueryCommand(id: Long, override val output: Seq[Attribute])
       extends LeafRunnableCommand {
     override def run(spark: SparkSession): Seq[Row] =
-      Seq(Row(String.valueOf(graft.engine.RunningQueries.cancel(spark, id))))
+      graft.engine.RunningQueries.cancel(spark, id) match {
+        case Right(found) => Seq(Row(String.valueOf(found)))
+        case Left(denied) => throw new SecurityException(denied)
+      }
   }
 
   // ---- users / roles / privileges (reference Parser.tdd:656-660;

@@ -25,6 +25,26 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The QueryExecution an SQL-execution-end event reports (`qe` is
+    * `private[sql]`); null when the event was posted without one. */
+  def executionOf(end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : org.apache.spark.sql.execution.QueryExecution = end.qe
+
+  /** A listener-bus event no Spark component consumes and the event log
+    * skips. Posting one orders a driver-side step against the bus's other
+    * events: listeners see it after every event posted before it. */
+  final case class Mark(id: Long) extends org.apache.spark.scheduler.SparkListenerEvent {
+    override protected[spark] def logEvent: Boolean = false
+  }
+
+  /** Post `e` to every listener (`listenerBus` is `private[spark]`). */
+  def post(sc: org.apache.spark.SparkContext,
+           e: org.apache.spark.scheduler.SparkListenerEvent): Unit = sc.listenerBus.post(e)
+
+  /** The session's identity (`sessionUUID` is `private[sql]`). */
+  def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Deep-nullable copy of a schema (`StructType.asNullable` is
     * `private[spark]`); file sources read absent columns as NULL, so their
     * data schema must not claim NOT NULL. */
@@ -35,8 +55,9 @@ object Bridge {
     * memoizes analyzed/optimized/executedPlan) and row encoder (both
     * `private[sql]`). The plan cache stores THESE rather than the Dataset:
     * every caller gets a fresh wrapper from [[datasetOf]], so abandoning a
-    * statement's Dataset still lets the GC-backstop reapers (queue slots,
-    * running-queries ledger) fire even while the plan stays cached. */
+    * statement's Dataset still lets the running-statement ledger's GC
+    * backstop reap it (and free its queue slot) while the plan stays
+    * cached. */
   def planArtifact(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.execution.QueryExecution, AnyRef) = {
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
@@ -50,8 +71,7 @@ object Bridge {
     * `sparkSession` is the listening session's own, so a cached plan
     * served to a DIFFERENT session (the plan cache's primary case: wire
     * front ends clone a session per statement) must be rebound or the
-    * calling session's WLM-slot and running-queries listeners never fire
-    * and slots retire only via the GC backstop. */
+    * calling session's listeners (query history) never see it. */
   private final class ReboundQueryExecution(
       session: classic.SparkSession,
       src: org.apache.spark.sql.execution.QueryExecution)

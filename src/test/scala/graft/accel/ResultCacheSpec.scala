@@ -130,4 +130,38 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM sys_result_cache").count() == 0L)
     ResultCache.clearAll()
   }
+
+  /** `count(*)` over 0..999 keeping the keys of the lake table at `dir`,
+    * read only inside an IN-subquery, served through the result cache. */
+  private def subqueryCount(dir: String): Long =
+    graft.Graft.cached(graft.Graft.sql(spark,
+      s"SELECT count(*) FROM range(0, 1000) WHERE id IN (SELECT k FROM lake_scan('$dir'))"))
+      .head().getLong(0)
+
+  test("a lake scan inside a subquery is part of the key: two tables never share an entry") {
+    ResultCache.clearAll()
+    val a = fresh("rc_subq_a") + "/t"
+    val b = fresh("rc_subq_b") + "/t"
+    spark.sql(s"CREATE LAKE '$a' AS SELECT id AS k FROM range(10)")
+    spark.sql(s"CREATE LAKE '$b' AS SELECT id AS k FROM range(20)")
+    try {
+      assert(subqueryCount(a) == 10L)
+      assert(subqueryCount(b) == 20L, "the query over b was served a's cached result")
+      val (entries, h, _) = ResultCache.stats
+      assert(entries == 2 && h == 0)
+    } finally ResultCache.clearAll()
+  }
+
+  test("a commit to a lake table read only inside a subquery invalidates the entry") {
+    ResultCache.clearAll()
+    val a = fresh("rc_subq_pin") + "/t"
+    spark.sql(s"CREATE LAKE '$a' AS SELECT id AS k FROM range(10)")
+    try {
+      assert(subqueryCount(a) == 10L)
+      assert(subqueryCount(a) == 10L)
+      assert(ResultCache.stats._2 == 1L, "the unchanged table should hit")
+      spark.sql(s"INSERT INTO LAKE '$a' SELECT id + 10 AS k FROM range(5)")
+      assert(subqueryCount(a) == 15L, "stale pre-commit result served after the commit")
+    } finally ResultCache.clearAll()
+  }
 }

@@ -82,4 +82,114 @@ class RunningQueriesSpec extends AnyFunSuite {
     assert(!RunningQueries.list.exists(_.id == mine.head.id),
       "abandoned statement never reaped")
   }
+
+  test("an earlier execution of a plan-cached statement does not retire a later one") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    def ids = RunningQueries.list.map(_.id).toSet
+    graft.Graft.sql(spark, "SELECT 1").collect() // the ledger's listener is installed
+    // park the listener bus so A's end event is still queued when B is ledgered
+    val parked = new CountDownLatch(1)
+    val gate = new CountDownLatch(1)
+    val blocker = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case _: SparkListenerSQLExecutionEnd if parked.getCount > 0 =>
+          parked.countDown(); gate.await(60, TimeUnit.SECONDS)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(blocker)
+    try {
+      spark.range(1).collect()
+      assert(parked.await(30, TimeUnit.SECONDS))
+      val q = "SELECT count(*) AS n FROM range(4321)"
+      val before = ids
+      val a = graft.Graft.sql(spark, q)
+      val aId = (ids -- before).head
+      assert(a.head().getLong(0) == 4321L)
+      val b = graft.Graft.sql(spark, q)
+      assert(b.queryExecution.analyzed eq a.queryExecution.analyzed,
+        "the second statement should be a plan-cache hit sharing the analyzed plan")
+      val bId = (ids -- before - aId).head
+      gate.countDown()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (ids(aId) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!ids(aId), "the executed statement never retired")
+      assert(ids(bId), "the first statement's execution retired the second one")
+      assert(b.head().getLong(0) == 4321L)
+      while (ids(bId) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!ids(bId), "the second statement never retired after its own action")
+    } finally {
+      gate.countDown()
+      spark.sparkContext.removeSparkListener(blocker)
+    }
+  }
+
+  test("one session's run of a plan-cached statement neither retires nor frees another session's") {
+    Queues.define("rq_shared", slots = 2, timeoutMs = 30000)
+    val sa = spark.newSession(); val sb = spark.newSession()
+    Seq(sa, sb).foreach(_.conf.set(graft.Graft.QueueConf, "rq_shared"))
+    def ids = RunningQueries.list.map(_.id).toSet
+    def running = Queues.status.find(_.name == "rq_shared").get.running
+    try {
+      val q = "SELECT count(*) AS n FROM range(5432)"
+      val before = ids
+      val a = graft.Graft.sql(sa, q)
+      val aId = (ids -- before).head
+      val b = graft.Graft.sql(sb, q)
+      assert(b.queryExecution.analyzed eq a.queryExecution.analyzed,
+        "the second session's statement should share the cached analyzed plan")
+      val bId = (ids -- before - aId).head
+      assert(running == 2)
+      assert(a.head().getLong(0) == 5432L)
+      org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+      assert(!ids(aId), "the executed statement never retired")
+      assert(ids(bId), "another session's execution retired the statement")
+      assert(running == 1, "another session's execution freed the statement's slot")
+      assert(b.head().getLong(0) == 5432L)
+      org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+      assert(!ids(bId) && running == 0)
+    } finally Queues.drop("rq_shared")
+  }
+
+  test("CANCEL QUERY applies the owner-or-admin rule while auth enforcement is on") {
+    import graft.auth.Privileges
+    def as(user: String, password: String) = {
+      val s = spark.newSession(); Privileges.login(s, user, password); s
+    }
+    Privileges.clear()
+    try {
+      spark.sql("CREATE USER rq_admin PASSWORD 'ap' ADMIN")
+      spark.sql("CREATE USER rq_owner PASSWORD 'op'")
+      spark.sql("CREATE USER rq_other PASSWORD 'xp'")
+      spark.sql("ALTER AUTH ENFORCE ON")
+      val owner = as("rq_owner", "op")
+      // a long statement owned by rq_owner, waited for until it is ledgered
+      def start(rows: Long): (Long, Future[scala.util.Try[Array[org.apache.spark.sql.Row]]]) = {
+        val before = RunningQueries.list.map(_.id).toSet
+        val victim = Future(scala.util.Try(graft.Graft.sql(owner,
+          s"SELECT sum(id * id) AS s FROM range($rows)").collect()))
+        val deadline = System.nanoTime() + 30e9.toLong
+        def fresh = RunningQueries.list.filterNot(r => before(r.id))
+        while (fresh.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        (fresh.head.id, victim)
+      }
+      val (id, victim) = start(60000000000L)
+      val refused = intercept[SecurityException](
+        as("rq_other", "xp").sql(s"CANCEL QUERY $id"))
+      assert(refused.getMessage.contains("neither admin nor the owner"), refused.getMessage)
+      assert(RunningQueries.list.exists(_.id == id) && !victim.isCompleted,
+        "a refused cancel must not kill the statement")
+      assert(owner.sql(s"CANCEL QUERY $id").head().getString(0) == "true")
+      assert(Await.result(victim, 120.seconds).isFailure, "the owner's cancel did not land")
+      val (id2, victim2) = start(60000000001L)
+      assert(as("rq_admin", "ap").sql(s"CANCEL QUERY $id2").head().getString(0) == "true")
+      assert(Await.result(victim2, 120.seconds).isFailure, "the admin's cancel did not land")
+    } finally {
+      Privileges.clear()
+      spark.conf.unset(Privileges.TokenConf)
+      spark.conf.unset(Privileges.UserConf)
+    }
+  }
 }
