@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 import graft.engine.{GraftSession, Tables}
 
@@ -72,16 +73,16 @@ object Graft {
     * plan would freeze the first execution's values.
     *
     * Statements in the graft extension grammar (lake DML, reflections,
-    * pipes — regex-parsed, so Spark's analyzer-side binding never sees
-    * their markers) bind by SQL-literal TEXT substitution instead:
-    * values render as quoted/escaped literals, marker scanning skips
-    * string and identifier quoting, and arity mismatches refuse loudly
-    * — the same contract either way. */
+    * pipes — parsed by graft's own grammar, so Spark's analyzer-side
+    * binding never sees their markers) bind by SQL-literal TEXT
+    * substitution instead: values render as quoted/escaped literals,
+    * marker scanning skips literals, identifier quoting and comments, and
+    * arity mismatches refuse loudly — the same contract either way. */
   def sql(spark: SparkSession, query: String, args: Array[Any]): DataFrame =
     // Dialect note: a marker in a graft statement can only sit inside a
     // Spark-parsed sub-query tail (the grammar's own quoted captures
-    // regex-REQUIRE quotes, so a template with a bare `?` there never
-    // matches the grammar in the first place) — which is why the
+    // REQUIRE quoted literals, so a template with a bare `?` there never
+    // parses into the grammar in the first place) — which is why the
     // Spark-dialect escaping is the correct rendering; bindGraft guards
     // the residual corruption case.
     if (isGraftGrammar(spark, query)) bindGraft(spark, query, args)
@@ -124,42 +125,35 @@ object Graft {
     catch { case NonFatal(_) => false }
   }
 
-  /** `?` markers outside quotes replaced by rendered SQL literals. The
-    * scanner honors backslash escapes inside string literals (Spark's
-    * default literal dialect): `'it\'s ?'` must not flip the in-string
-    * state and hand its `?` a value.
+  /** `?` markers outside literals, quoted identifiers and comments
+    * replaced by rendered SQL literals. The markers are the extension
+    * grammar's own tokens ([[graft.sqlext.SqlTokens]]), which honor
+    * backslash escapes inside string literals (Spark's default literal
+    * dialect): `'it\'s ?'` holds no marker.
     *
     * Escape-dialect note: this path only runs for statements the GRAFT
     * grammar parses, and there a marker can only sit inside a SQL
     * sub-query tail (`INSERT INTO LAKE ... SELECT ?`,
-    * `CREATE REFLECTION ... AS <query>`) — the grammar's own quoted
-    * captures (`'path'`) regex-require quotes, so a template with a bare
-    * `?` in that position never matches the grammar in the first place.
+    * `CREATE REFLECTION ... AS <query>`) — the grammar's own literal
+    * positions (`'path'`) require a quoted string, so a template with a
+    * bare `?` there never parses into the grammar in the first place.
     * The tail is re-parsed by SPARK, so Spark-dialect escaping (`\\`,
     * `''`) is the correct rendering for every reachable marker; the
     * caller additionally re-checks that the bound statement still parses
     * into the grammar, closing the corruption path structurally. */
   private def substitutePositional(query: String, args: Array[Any]): String = {
+    val markers = graft.sqlext.SqlTokens.tokenize(query).filter(_.kind == '?')
+    require(markers.length <= args.length,
+      s"statement has more `?` markers than the ${args.length} bound values")
+    require(markers.length == args.length,
+      s"${args.length} values bound but the statement has ${markers.length} `?` markers")
     val sb = new StringBuilder(query.length + 32)
-    var inStr = false; var inIdent = false; var argIdx = 0
-    var i = 0
-    while (i < query.length) {
-      query(i) match {
-        case '\\' if inStr && i + 1 < query.length =>
-          sb.append('\\').append(query(i + 1)); i += 1
-        case '\'' if !inIdent => inStr = !inStr; sb.append('\'')
-        case '`' if !inStr => inIdent = !inIdent; sb.append('`')
-        case '?' if !inStr && !inIdent =>
-          require(argIdx < args.length,
-            s"statement has more `?` markers than the ${args.length} bound values")
-          sb.append(sqlLiteral(args(argIdx))); argIdx += 1
-        case c => sb.append(c)
-      }
-      i += 1
+    var from = 0
+    markers.zip(args).foreach { case (m, v) =>
+      sb.append(query.substring(from, m.start)).append(sqlLiteral(v))
+      from = m.end
     }
-    require(argIdx == args.length,
-      s"${args.length} values bound but the statement has $argIdx `?` markers")
-    sb.toString
+    sb.append(query.substring(from)).toString
   }
 
   private def sqlLiteral(v: Any): String = v match {
@@ -184,8 +178,12 @@ object Graft {
     * in the running-statement ledger. */
   private def managed(spark: SparkSession, query: String)
                      (body: => DataFrame): DataFrame = {
+    // parsed at most once, and only when a routing step reads the plan; a
+    // parse error surfaces from the statement itself, unqueued
+    lazy val parsed = try Some(spark.sessionState.sqlParser.parsePlan(query))
+      catch { case scala.util.control.NonFatal(_) => None }
     val queue = spark.conf.getOption(QueueConf).filter(_.nonEmpty)
-      .orElse(routeByRule(spark, query)).orElse(autoQueue(spark, query))
+      .orElse(routeByRule(spark, query, parsed)).orElse(autoQueue(spark, parsed))
     graft.engine.RunningQueries.tracked(spark, query, queue)(body)
   }
 
@@ -197,13 +195,11 @@ object Graft {
     * ('command' for statement-shaped plans, 'query' otherwise),
     * `statement` (the raw SQL — LIKE-able), `est_cost` (planned input
     * bytes, computed only when some rule reads it). */
-  private def routeByRule(spark: SparkSession, query: String): Option[String] = {
-    import scala.util.control.NonFatal
+  private def routeByRule(spark: SparkSession, query: String,
+                          parsedOnce: => Option[LogicalPlan]): Option[String] = {
     val queues = graft.engine.Queues
     if (!queues.hasRules) return None
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(query)
-      catch { case NonFatal(_) => return None } // surface the parse error unqueued
+    val parsed = parsedOnce.getOrElse(return None)
     val qt =
       if (parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command])
         "command" else "query"
@@ -218,12 +214,10 @@ object Graft {
   }
 
   /** Cost-based queue choice for [[sql]], or None for unmanaged. */
-  private def autoQueue(spark: SparkSession, query: String): Option[String] = {
-    import scala.util.control.NonFatal
+  private def autoQueue(spark: SparkSession,
+                        parsedOnce: => Option[LogicalPlan]): Option[String] = {
     if (!spark.conf.getOption(QueueAutoConf).exists(_.equalsIgnoreCase("true"))) return None
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(query)
-      catch { case NonFatal(_) => return None } // surface the parse error unqueued
+    val parsed = parsedOnce.getOrElse(return None)
     val reflectionQueue =
       if (parsed.getClass.getSimpleName.contains("Reflection")) {
         // per-dataset routing first (reference ReflectionRoutingManager:
@@ -269,8 +263,8 @@ object Graft {
     * over-admitting an expensive query never starves the interactive
     * queue, the reverse does. */
   private def estimateCost(spark: SparkSession,
-                           parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): BigInt = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan}
+                           parsed: LogicalPlan): BigInt = {
+    import org.apache.spark.sql.catalyst.plans.logical.Command
     import org.apache.spark.sql.execution.CommandExecutionMode
     import scala.util.control.NonFatal
     def sizeOf(p: LogicalPlan): BigInt =

@@ -2,7 +2,6 @@ package graft.accel
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -14,10 +13,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, Logi
   * previously built QueryExecution (which memoizes each phase) wrapped in
   * a fresh caller-owned Dataset. Execution still happens per action —
   * this caches the PLAN, the result cache (`cached('...')` /
-  * [[ResultCache]]) caches RESULTS. Statements sharing a cached plan also
-  * share action-completion detection (the WLM slot listener keys on the
-  * plan), so one statement's first action may release a concurrent
-  * identical statement's slot early — capacity frees early, never leaks.
+  * [[ResultCache]]) caches RESULTS. Statements sharing a cached plan stay
+  * separate statements: the running-statement ledger
+  * ([[graft.engine.RunningQueries]]) gives an execution to a statement
+  * only when it runs in the statement's own session and started after the
+  * statement was ledgered, so one statement's action never retires an
+  * identical statement or frees its WLM slot.
   *
   * Reference: the coordinator plan cache keyed on a statement hash with
   * dataset-level invalidation (`exec/planner/plancache/PlanCache.java`,
@@ -75,9 +76,8 @@ object PlanCache {
 
   // The entry holds the QueryExecution + encoder, NOT a Dataset: each hit
   // wraps them in a fresh caller-owned Dataset (Bridge.datasetOf), so the
-  // GC-backstop reapers for abandoned statements (queue slots,
-  // running-queries ledger) — which weak-reference the caller's Dataset —
-  // keep working while the plan stays cached.
+  // ledger's reaper for abandoned statements — which weak-references the
+  // caller's Dataset — keeps working while the plan stays cached.
   private final case class Entry(
       key: String, statement: String,
       qe: org.apache.spark.sql.execution.QueryExecution, enc: AnyRef,
@@ -209,7 +209,7 @@ object PlanCache {
           val (qe, enc) = org.apache.spark.sql.graft.Bridge.planArtifact(df)
           cache.putIfAbsent(key, Entry(key,
             text.linesIterator.mkString(" ").take(200), qe, enc, pins,
-            tempViewIds(spark, text), epoch.get,
+            tempViewIds(spark, df.queryExecution.logical), epoch.get,
             new AtomicLong(0), now, new AtomicLong(now)))
           evictIfOver()
         } // else: pinned to a superseded snapshot (time travel) —
@@ -249,18 +249,15 @@ object PlanCache {
 
   /** Raw temp-view object identity for every relation name the statement
     * references — the live check that catches DataFrame-API
-    * `createOrReplaceTempView` (which never crosses this choke point). */
+    * `createOrReplaceTempView` (which never crosses this choke point).
+    * `parsed` is the plan `spark.sql` parsed from the statement text. */
   private def tempViewIds(spark: SparkSession,
-                          text: String): Seq[(Seq[String], Option[Int])] = {
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(text)
-      catch { case NonFatal(_) => return Nil }
+                          parsed: LogicalPlan): Seq[(Seq[String], Option[Int])] =
     (parsed +: parsed.subqueriesAll)
       .flatMap(_.collect { case u: UnresolvedRelation => u.multipartIdentifier })
       .distinct
       .filter(_.lengthCompare(2) <= 0)
       .map(parts => parts -> rawViewId(spark, parts))
-  }
 
   private def rawViewId(spark: SparkSession, parts: Seq[String]): Option[Int] = {
     val cat = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

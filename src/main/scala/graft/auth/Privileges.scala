@@ -303,6 +303,14 @@ object Privileges {
         u.roles.flatMap(r => grants.getOrElse(("role", r), Set.empty)))
   }
 
+  /** Does a catalog listing show `obj` to `principal`? Everything while
+    * enforcement is off; otherwise only what the principal may SELECT —
+    * the rule statement execution enforces, so no listing discloses the
+    * schema of an ungranted dataset. The REST catalog and the Flight
+    * ListFlights / GetTables listings all apply it. */
+  def visible(principal: Option[User], obj: String): Boolean =
+    !enforcing || principal.exists(u => allowed(u, "select", normObj(obj)))
+
   /** Does the user hold `action` (or ALL) on `obj` (or `*`, or a
     * covering CONTAINER grant)? `obj` must already be normalized.
     * Container grants (reference `GRANT ... ON ALL DATASETS IN

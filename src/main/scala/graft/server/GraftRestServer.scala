@@ -907,9 +907,6 @@ object GraftRestServer {
           case Left((code, msg)) => respond(ex, code, error(msg))
           case Right(principal) =>
             val p = graft.auth.Privileges
-            def visible(obj: String): Boolean =
-              !p.enforcing ||
-                principal.exists(u => p.allowed(u, "select", p.normObj(obj)))
             if (isCollab) {
               handleCollab(ex, principal, collabParts(0), collabParts(2))
               return
@@ -942,7 +939,7 @@ object GraftRestServer {
                 .select(col("table_name"),
                   to_json(struct(col("*"))).as("__j"))
                 .collect()
-                .filter(r => visible(r.getString(0)) && matches(r.getString(0)))
+                .filter(r => p.visible(principal, r.getString(0)) && matches(r.getString(0)))
                 .map(_.getString(1)).mkString(",")
               val refl = graft.accel.Reflections.list.map(r =>
                 s"""{"name":${q(r.name)},"path":${q(r.path)},""" +
@@ -951,7 +948,7 @@ object GraftRestServer {
             } else if (rest == "lake") {
               val dir = queryParam(ex, "path").getOrElse("")
               if (dir.isEmpty) respond(ex, 400, error("lake needs ?path=<dir>"))
-              else if (!visible(dir)) respond(ex, 403,
+              else if (!p.visible(principal, dir)) respond(ex, 403,
                 error(s"no SELECT grant on '$dir'"))
               else if (!graft.sources.SnapshotTable.isLakeTable(dir))
                 respond(ex, 404, error(s"no lake table at '$dir'"))
@@ -964,7 +961,7 @@ object GraftRestServer {
                   s"""{"path":${q(dir)},"version":${t.latestVersion},""" +
                     s""""refs":[$refs]}""")
               }
-            } else if (!visible(rest)) {
+            } else if (!p.visible(principal, rest)) {
               respond(ex, 403, error(s"no SELECT grant on '$rest'"))
             } else {
               import org.apache.spark.sql.functions.col

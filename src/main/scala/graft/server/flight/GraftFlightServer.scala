@@ -994,13 +994,9 @@ object GraftFlightServer {
           try {
             val session = root.newSession()
             bindPrincipal(root, session)
-            val p = graft.auth.Privileges
-            val principal = p.principalOf(session)
-            def visible(name: String): Boolean =
-              !p.enforcing || principal.exists(u =>
-                p.allowed(u, "select", p.normObj(name)))
+            val principal = graft.auth.Privileges.principalOf(session)
             val granted = root.catalog.listTables().collect()
-              .filter(t => visible(t.name))
+              .filter(t => graft.auth.Privileges.visible(principal, t.name))
             val listed = granted.take(500)
             if (granted.length > listed.length)
               log.warn(s"flight ListFlights: catalog has ${granted.length} " +

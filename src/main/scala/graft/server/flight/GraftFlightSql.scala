@@ -167,18 +167,14 @@ private[graft] object GraftFlightSql {
   def tablesDf(root: SparkSession, session: SparkSession,
                cmd: PbSql.GetTables): DataFrame = {
     import root.implicits._
-    val p = graft.auth.Privileges
-    val principal = p.principalOf(session)
-    def visible(name: String): Boolean =
-      !p.enforcing || principal.exists(u =>
-        p.allowed(u, "select", p.normObj(name)))
+    val principal = graft.auth.Privileges.principalOf(session)
     val rows: Seq[(String, String, String, String, Array[Byte])] =
       if (!cmd.catalog.forall(c => c == CatalogName || c.isEmpty)) Seq.empty
       else root.catalog.listTables().collect().toSeq
         .filter { t =>
           val db = Option(t.database).getOrElse("")
           matches(cmd.dbPattern, db) && matches(cmd.tablePattern, t.name) &&
-            visible(t.name)
+            graft.auth.Privileges.visible(principal, t.name)
         }
         .flatMap { t =>
           val tableType =

@@ -11,96 +11,12 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import graft.accel.Reflections
 import graft.streaming.{Pipe, Pipes}
 
-/** SQL statement extensions (reference: Dremio's parser adds 60+ custom
-  * statements on top of Calcite's grammar —
-  * `sabot/grammar/src/main/codegen/data/Parser.tdd:624`, reflection/PIPE DDL
-  * in `ingestion.ftl`). Injected via `SparkSessionExtensions.injectParser`;
-  * unrecognized statements fall through to Spark's parser untouched.
-  *
-  * Grammar (whitespace-insensitive, case-insensitive keywords):
-  *   CREATE REFLECTION <name> USING PATH '<dir>' AS <query>
-  *   REFRESH REFLECTION <name>      -- re-materialize from stored SQL
-  *   DROP REFLECTION <name>
-  *   SHOW REFLECTIONS
-  *   CREATE PIPE <name> FROM '<srcDir>' FORMAT <fmt> SCHEMA '<ddl>'
-  *     MERGE KEY <col> INTO LAKE '<dir>' CHECKPOINT '<chk>'  -- CDC upsert pipe
-  *   CREATE PIPE <name> FROM '<srcDir>' FORMAT <fmt> SCHEMA '<ddl>'
-  *     INTO LAKE '<dir>' CHECKPOINT '<chk>'    -- atomic lake append pipe
-  *   CREATE PIPE <name> FROM '<srcDir>' FORMAT <fmt> SCHEMA '<ddl>'
-  *     INTO '<targetDir>' CHECKPOINT '<dir>'
-  *   CREATE PIPE <name> FROM LAKE '<srcTable>' [MERGE KEY <col>]
-  *     INTO LAKE '<dstTable>' CHECKPOINT '<chk>'  -- incremental lake→lake
-  *   TRIGGER PIPE <name>
-  *   SHOW PIPES
-  *   SHOW STREAMS                               -- active streaming queries
-  *   ALTER LAKE '<dir>' SET PARTITION SPEC (t(c), ...)  -- partition evolution
-  *   ALTER TABLE <ident> REFRESH METADATA
-  *   DESCRIBE LAKE '<dir>'                      -- snapshot history
-  *   CREATE LAKE '<dir>' [PARTITION BY (t(c), ...)] [STATS (c, ...)]
-  *     [DISTRIBUTE BY (c, ...)] [SORT|LOCALSORT BY (c, ...)]
-  *     [CLUSTER BY (c, ...)] [WITH SINGLE WRITER] AS <query>
-  *     -- partitioned CTAS; CLUSTER BY declares clustering keys
-  *     -- (exclusive with PARTITION BY / SORT BY); DISTRIBUTE BY
-  *     -- hash-clusters rows across writers; SINGLE WRITER -> one file;
-  *     SORT BY sorts each data file (with a bucket transform: a SORTED
-  *     bucketed table — merge joins need neither shuffle nor sort)
-  *   CREATE LAKE VIEW <name> FROM '<dir>'
-  *     [VERSION AS OF <n> | TIMESTAMP AS OF '<ts>']
-  *   OPTIMIZE LAKE '<dir>' [ORDER BY c[, ...]] [INTO <n> FILES] [WHERE cond]
-  *   OPTIMIZE LAKE '<dir>' REWRITE MANIFESTS   -- metadata-only checkpoint
-  *   OPTIMIZE LAKE '<dir>' REWRITE DATA [USING BIN_PACK]
-  *     [FOR PARTITIONS (<cond>)] [(MIN_INPUT_FILES = n,
-  *     TARGET_FILE_SIZE_MB = t, MIN_FILE_SIZE_MB = a, MAX_FILE_SIZE_MB = b)]
-  *     -- size-banded bin-pack: only unhealthy files rewrite
-  *   INSERT INTO LAKE '<dir>' <query>           -- append, inherits layout
-  *   DELETE FROM LAKE '<dir>' WHERE <cond>      -- copy-on-write DML
-  *   UPDATE LAKE '<dir>' SET c = <expr>[, ...] WHERE <cond>
-  *   MERGE INTO LAKE '<dir>' KEY <col> USING <query>   -- upsert by key
-  *   MERGE INTO LAKE '<dir>' ON <col> USING (<query>)  -- ANSI clause MERGE
-  *     { WHEN MATCHED [AND <cond>] THEN UPDATE SET <c = expr, ...> | *
-  *     | WHEN MATCHED [AND <cond>] THEN DELETE }...
-  *     [WHEN NOT MATCHED [AND <cond>] THEN INSERT]
-  *     (conditions/expressions reference aliases t = target, s = source)
-  *   CREATE LAKE CHANGES VIEW <name> FROM '<dir>' BETWEEN <v1> AND <v2>
-  *     -- row-level CDC: _change_type = insert | delete
-  *   CREATE BRANCH <name> FROM LAKE '<dir>' [VERSION AS OF <n>]
-  *   CREATE TAG <name> FROM LAKE '<dir>' [VERSION AS OF <n>]
-  *   DROP BRANCH|TAG <name> FROM LAKE '<dir>'
-  *   SHOW REFS FROM LAKE '<dir>'
-  *   INSERT INTO LAKE '<dir>' AT BRANCH <name> <query>  -- staged append
-  *   DELETE FROM LAKE '<dir>' AT BRANCH <name> WHERE <cond>  -- staged COW
-  *   UPDATE LAKE '<dir>' AT BRANCH <name> SET ... WHERE ...  -- staged COW
-  *   CREATE LAKE VIEW <name> FROM '<dir>' AT BRANCH|TAG <ref>
-  *   MERGE BRANCH <name> INTO LAKE '<dir>'
-  *     -- fast-forward squash at the fork base; three-way merge with
-  *     -- file-granular conflict detection when main diverged
-  *   ALTER LAKE '<dir>' RENAME COLUMN <old> TO <new>   -- id-stable rename
-  *   ALTER LAKE '<dir>' ADD COLUMN <name> <type>       -- fresh field id
-  *   ALTER LAKE '<dir>' DROP COLUMN <name>             -- id retired
-  *   ALTER LAKE '<dir>' CHANGE|MODIFY [COLUMN] <old> <new> <type>
-  *     -- rename + widening retype, both metadata-only
-  *   ALTER LAKE|TABLE '<dir>' REFRESH REFLECTIONS  -- bulk anchored refresh
-  *   ALTER TABLE <name> FORGET METADATA        -- drop a promotion, keep data
-  *   ALTER TABLE <name> ENABLE|DISABLE SCHEMA LEARNING  -- promoted datasets
-  *   ALTER LAKE '<dir>' CLUSTER BY (c1, c2)   -- clustering keys: sticky
-  *     -- sort order + marker property; keyless OPTIMIZE rewrites
-  *     -- Z-order-clustered (reference SqlAlterTableClusterKey)
-  *   ALTER LAKE '<dir>' DROP CLUSTERING KEY
-  *   ROLLBACK LAKE '<dir>' TO VERSION <n>   -- restore as a new commit
-  *   VACUUM LAKE '<dir>' [OLDER_THAN '<ts>'] [RETAIN <n> VERSIONS] [GRACE <ms>]
-  *   VACUUM LAKE '<dir>' REMOVE ORPHAN FILES [OLDER_THAN '<ts>'] [LOCATION '<p>']
-  *     -- unreferenced-file sweep, NO history expiry (every snapshot
-  *     -- stays time-travelable); OLDER_THAN defaults to 3 days ago
-  *   VACUUM CATALOG '<root>' [OLDER_THAN '<ts>'] [RETAIN <n> VERSIONS] [GRACE <ms>]
-  *   SHOW CREATE LAKE '<dir>' [AT BRANCH|TAG <ref>]  -- DDL + layout + head version
-  *   ANALYZE LAKE '<dir>' [FOR COLUMNS (a, b)]
-  *     [COMPUTE STATISTICS [WITH HISTOGRAM [n BUCKETS]]]
-  *     -- one-pass column profile (HLL ndv); COMPUTE STATISTICS persists
-  *     -- row count / NDV / nulls / min-max / equi-height histograms into
-  *     -- TBLPROPERTIES where full-snapshot scans feed Spark CBO
-  *   COPY INTO '<targetDir>' FROM '<src>' FORMAT <fmt> SCHEMA '<ddl>'
-  *     [ON_ERROR CONTINUE|ABORT]                -- reference CopyIntoTableContext
-  */
+/** SQL statement extensions, injected via
+  * `SparkSessionExtensions.injectParser`. The statements and their grammar
+  * are [[SqlGrammar]]'s rule table; a statement no rule accepts goes to
+  * Spark's parser untouched, after the top-level QUALIFY rewrite
+  * ([[SqlGrammar.qualifyRewrite]]). The commands the rules build live in
+  * the companion object. */
 class GraftSqlParser(spark: SparkSession, delegate: ParserInterface) extends ParserInterface {
 
   import GraftSqlParser._
@@ -136,434 +52,9 @@ class GraftSqlParser(spark: SparkSession, delegate: ParserInterface) extends Par
 
   private def parseWith(sqlText: String,
                         fallback: String => LogicalPlan): LogicalPlan = {
-    val t = sqlText.trim
-    t match {
-      case CreateExternalReflectionRe(name, path, query) =>
-        CreateExternalReflectionCommand(name, path, query)
-      case CreateReflectionRe(name, path, query) =>
-        CreateReflectionCommand(name, path, query)
-      case RefreshReflectionRe(name) => RefreshReflectionCommand(name)
-      case RefreshReflectionsForRe(dir) =>
-        RefreshReflectionsForDatasetCommand(dir, out("reflection", "status"))
-      case RefreshAllReflectionsRe() =>
-        RefreshAllReflectionsCommand(out("reflection", "status"))
-      case MaintainReflectionsRe() =>
-        MaintainReflectionsCommand(out("reflection", "action"))
-      case AlterReflectionPolicyRe(name, minutes) =>
-        AlterReflectionPolicyCommand(name,
-          Option(minutes).map(_.trim.toLong), out("reflection", "policy"))
-      case LoadMaterializationRe(name) =>
-        LoadMaterializationCommand(name, out("reflection", "path"))
-      case ForgetMetadataRe(name) =>
-        ForgetMetadataCommand(name, out("dataset"))
-      case DropReflectionRe(name) => DropReflectionCommand(name)
-      case ShowReflectionsRe() => ShowReflectionsCommand(out("name", "fingerprint", "path"))
-      case CreateLakeSrcCdcPipeRe(name, srcDir, key, target, chk) =>
-        CreatePipeCommand(name, srcDir, "lakesource", "", target, chk,
-          sink = "merge", mergeKey = Some(key))
-      case CreateLakeSrcPipeRe(name, srcDir, target, chk) =>
-        CreatePipeCommand(name, srcDir, "lakesource", "", target, chk,
-          sink = "lake")
-      case CreateCdcPipeRe(name, src, fmt, ddl, key, target, chk, expect) =>
-        CreatePipeCommand(name, src, fmt.toLowerCase, ddl, target, chk,
-          sink = "merge", mergeKey = Some(key),
-          expectations = Option(expect).map(parseExpectations).getOrElse(Nil))
-      case CreateLakePipeRe(name, lookback, src, fmt, ddl, target, chk, expect, prov, queue) =>
-        CreatePipeCommand(name, src, fmt.toLowerCase, ddl, target, chk,
-          sink = "lake", notifyProvider = Option(prov), notifyQueue = Option(queue),
-          lookbackDays = Option(lookback).map(_.toInt),
-          expectations = Option(expect).map(parseExpectations).getOrElse(Nil))
-      case CreatePipeRe(name, lookback, src, fmt, ddl, target, chk, expect, prov, queue) =>
-        CreatePipeCommand(name, src, fmt.toLowerCase, ddl, target, chk,
-          notifyProvider = Option(prov), notifyQueue = Option(queue),
-          lookbackDays = Option(lookback).map(_.toInt),
-          expectations = Option(expect).map(parseExpectations).getOrElse(Nil))
-      case TriggerPipeRe(name, batch) =>
-        TriggerPipeCommand(name, Option(batch).map(_.toLong))
-      case ShowPipesRe() => ShowPipesCommand(out("name", "source", "format", "target"))
-      case ShowStreamsRe() => ShowStreamsCommand(out("id", "name", "batch_id",
-        "num_input_rows", "status"))
-      case AlterPipeStatusRe(name, flag) =>
-        AlterPipeStatusCommand(name, flag.equalsIgnoreCase("TRUE"))
-      case AlterPipeDefRe() =>
-        // redefinition form (SqlAlterPipe ... AS <load spec>): same tail
-        // grammar as CREATE PIPE, but the pipe must already exist and its
-        // paused state survives the redefinition
-        parsePlan(t.replaceFirst("(?is)^\\s*ALTER", "CREATE")) match {
-          case c: CreatePipeCommand => AlterPipeDefCommand(c)
-          case _ => throw new IllegalArgumentException(
-            s"cannot parse ALTER PIPE definition: $t")
-        }
-      case DropPipeRe(ifExists, name) => DropPipeCommand(name, ifExists != null)
-      case DescribePipeRe(name) =>
-        DescribePipeCommand(name, out("name", "source", "format", "target",
-          "checkpoint", "sink", "merge_key", "running", "notification",
-          "dedupe_lookback_days", "expectations"))
-      case UseRefRe(refType, name, dir) =>
-        UseRefCommand(refType.toLowerCase, name, dir,
-          out("ref", "type", "base_version"))
-      case UseVersionRe(version, dir) =>
-        UseVersionCommand(version.toLong, dir, out("ref", "type", "base_version"))
-      case UseDefaultRe(dir) =>
-        UseDefaultCommand(dir, out("ref", "type", "base_version"))
-      case ShowLogsRe(refType, refName, dir) =>
-        ShowLogsCommand(Option(refType).map(_.toLowerCase), Option(refName), dir,
-          out("version", "action", "timestamp_ms", "n_files", "tag"))
-      case ShowFilesLakeRe(dir) =>
-        ShowFilesLakeCommand(dir, out("file_path", "size_bytes", "row_count"))
-      case TruncateLakeRe(dir) => TruncateLakeCommand(dir, out("version"))
-      case ClearResultCacheRe() => ClearResultCacheCommand()
-      case ClearPlanCacheRe() => ClearPlanCacheCommand()
-      case ExplainAccelRe(query) =>
-        ExplainAccelerationCommand(query,
-          out("reflection", "fingerprint", "used", "fresh"))
-      case ExplainJsonRe(phase, query) =>
-        ExplainJsonCommand(Option(phase).map(_.toLowerCase).getOrElse("physical"),
-          query, out("phase", "plan_json"))
-      case CreateFolderRe(ifNotExists, name) =>
-        FolderCommand(name, create = true, ifNotExists != null, out("folder"))
-      case DropFolderRe(ifExists, name) =>
-        FolderCommand(name, create = false, ifExists != null, out("folder"))
-      case CancelQueryRe(id) => CancelQueryCommand(id.toLong, out("cancelled"))
-      case CreateUserRe(name, pw, adminFlag) =>
-        CreateUserCommand(name, pw, adminFlag != null, out("user"))
-      case DropUserRe(name) => DropUserCommand(name)
-      case CreateRoleRe(name) => CreateRoleCommand(name, out("role"))
-      case DropRoleRe(name) => DropRoleCommand(name)
-      case GrantRoleRe(role, user) => GrantRoleCommand(role, user, granting = true)
-      case RevokeRoleRe(role, user) => GrantRoleCommand(role, user, granting = false)
-      case GrantOnRefRe(privs, refType, ref, dir, kind, grantee) =>
-        GrantOnRefCommand(splitPrivs(privs), refType.toLowerCase, ref, dir,
-          kind, grantee, granting = true)
-      case RevokeOnRefRe(privs, refType, ref, dir, kind, grantee) =>
-        GrantOnRefCommand(splitPrivs(privs), refType.toLowerCase, ref, dir,
-          kind, grantee, granting = false)
-      case GrantOnCatalogRe(privs, dir, kind, grantee) =>
-        GrantOnCatalogCommand(splitPrivs(privs), dir, kind, grantee, granting = true)
-      case RevokeOnCatalogRe(privs, dir, kind, grantee) =>
-        GrantOnCatalogCommand(splitPrivs(privs), dir, kind, grantee, granting = false)
-      case ShowGrantsOnRefRe(refType, ref, dir) =>
-        ShowGrantsOnRefCommand(refType.toLowerCase, ref, dir,
-          out("grantee_type", "grantee", "privilege"))
-      case CreateScriptRe(name, content) =>
-        ScriptDdlCommand(name, Some(content.replace("''", "'")), create = true,
-          out("script", "owner"))
-      case AlterScriptRe(name, content) =>
-        ScriptDdlCommand(name, Some(content.replace("''", "'")), create = false,
-          out("script", "owner"))
-      case DropScriptRe(name) => DropScriptCommand(name)
-      case DescribeScriptRe(name) =>
-        DescribeScriptCommand(name,
-          out("script", "owner", "content", "created_ms", "modified_ms"))
-      case RunScriptRe(name) => runScriptPlan(name)
-      case ShowScriptsRe(limit) =>
-        ShowScriptsCommand(Option(limit).map(_.toInt),
-          out("script", "owner", "modified_ms"))
-      case GrantAllDatasetsRe(action, container, qpath, bare, kind, grantee) =>
-        GrantAllDatasetsCommand(action, container.toLowerCase,
-          Option(qpath).getOrElse(bare), kind, grantee, granting = true)
-      case RevokeAllDatasetsRe(action, container, qpath, bare, kind, grantee) =>
-        GrantAllDatasetsCommand(action, container.toLowerCase,
-          Option(qpath).getOrElse(bare), kind, grantee, granting = false)
-      case ShowGrantsOnScriptRe(name) =>
-        ShowGrantsOnScriptCommand(name,
-          out("grantee_type", "grantee", "privilege"))
-      case GrantOnScriptRe(privs, name, kind, grantee) =>
-        GrantOnScriptCommand(splitPrivs(privs), name, kind, grantee, granting = true)
-      case RevokeOnScriptRe(privs, name, kind, grantee) =>
-        GrantOnScriptCommand(splitPrivs(privs), name, kind, grantee, granting = false)
-      case GrantRe(action, qobj, obj, kind, grantee) =>
-        GrantCommand(action, Option(qobj).getOrElse(obj), kind, grantee, granting = true)
-      case RevokeRe(action, qobj, obj, kind, grantee) =>
-        GrantCommand(action, Option(qobj).getOrElse(obj), kind, grantee, granting = false)
-      case AuthenticateRe(name, pw) =>
-        AuthenticateCommand(name, pw, out("user", "token"))
-      case GrantOwnershipRe(qobj, obj, kind, grantee) =>
-        GrantOwnershipCommand(Option(qobj).getOrElse(obj), kind, grantee,
-          out("object", "owner_type", "owner"))
-      case ShowGrantsOnRe(qobj, obj) =>
-        ShowGrantsOnCommand(Option(qobj).getOrElse(obj),
-          out("grantee_type", "grantee", "privilege"))
-      case ShowGrantsRe(who) =>
-        ShowGrantsCommand(Option(who),
-          out("grantee_type", "grantee", "privilege", "object"))
-      case AlterAuthRe(onOff) => AlterAuthCommand(onOff.equalsIgnoreCase("ON"))
-      case CreateQueueRe(name, slots, timeout) =>
-        CreateQueueCommand(name, slots.toInt, Option(timeout).map(_.toLong))
-      case AlterQueueRe(name, slots, timeout) =>
-        AlterQueueCommand(name, slots.toInt, Option(timeout).map(_.toLong))
-      case CompactMaterializationRe(name, nFiles) =>
-        CompactMaterializationCommand(name,
-          Option(nFiles).map(_.toInt).getOrElse(1), out("reflection", "files"))
-      case DropQueueRe(name) => DropQueueCommand(name)
-      case AlterEngineRe(name, body) => AlterEngineCommand(name, body,
-        out("engine", "min_replicas", "max_replicas", "queue_slots"))
-      case ShowEnginesRe() => ShowEnginesCommand(
-        out("engine", "min_replicas", "max_replicas", "queue_slots"))
-      case ShowQueuesRe() =>
-        ShowQueuesCommand(out("name", "slots", "pool", "running", "queued",
-          "admitted", "timed_out"))
-      case CreateRoutingRuleRe(name, priority, cond, queue) =>
-        CreateRoutingRuleCommand(name, priority.toInt, cond.trim, queue)
-      case DropRoutingRuleRe(name) => DropRoutingRuleCommand(name)
-      case ShowRoutingRulesRe() =>
-        ShowRoutingRulesCommand(out("name", "priority", "condition", "queue"))
-      case CreateAggReflectionRe(table, name, path, dims, measures, partBy) =>
-        CreateAggReflectionCommand(table, name, path,
-          splitCols(dims), splitCols(measures), splitCols(partBy),
-          out("reflection", "fingerprint"))
-      case CreateRawReflectionRe(table, name, path, display, partBy) =>
-        CreateRawReflectionCommand(table, name, path,
-          splitCols(display), splitCols(partBy),
-          out("reflection", "fingerprint"))
-      case AlterRefreshScopedRe(qpath, bare, filesList, partList, regex,
-          promo, forceKw, missingKw, errConc) =>
-        refreshDatasetCommand(qpath, bare, filesList, partList, regex,
-          promo, forceKw, missingKw, errConc)
-      case RefreshDatasetRe(qpath, bare, filesList, partList, regex,
-          promo, forceKw, missingKw, errConc) =>
-        refreshDatasetCommand(qpath, bare, filesList, partList, regex,
-          promo, forceKw, missingKw, errConc)
-      case RefreshMetadataRe(quoted, bare) =>
-        RefreshMetadataCommand(Option(quoted).getOrElse(bare))
-      case AccelToggleRe(qdir, bare, onOff, kind) =>
-        AccelToggleCommand(Option(qdir).getOrElse(bare), kind,
-          onOff.equalsIgnoreCase("ENABLE"),
-          out("dataset", "kind", "acceleration"))
-      case ToggleSchemaLearnRe(name, mode) =>
-        ToggleSchemaLearningCommand(name, mode.equalsIgnoreCase("ENABLE"),
-          out("dataset", "schema_learning"))
-      case DescribeLakeRe(dir, ref) =>
-        DescribeLakeCommand(dir,
-          out("version", "action", "timestamp_ms", "n_files", "partition_spec"),
-          Option(ref))
-      case CreateLakeTableRe(dir, spec, distBy, statsCols, sortBy, clusterBy,
-                             single, query) =>
-        CreateLakeTableCommand(dir,
-          Option(spec).map(splitTopLevel).getOrElse(Nil),
-          Option(statsCols).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            .getOrElse(Nil),
-          Option(sortBy).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            .getOrElse(Nil),
-          query,
-          Option(clusterBy).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            .getOrElse(Nil),
-          Option(distBy).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-            .getOrElse(Nil),
-          single != null)
-      case CreateLakeViewRe(name, dir, version, asOfTs) =>
-        CreateLakeViewCommand(name, dir, Option(version).map(_.toLong),
-          Option(asOfTs).map(parseTsMillis))
-      case OptimizeManifestsRe(dir) =>
-        RewriteManifestsCommand(dir, out("version"))
-      case OptimizeRewriteDataRe(dir, cond, opts) =>
-        OptimizeRewriteDataCommand(dir, Option(cond),
-          Option(opts).getOrElse(""), out("version"))
-      case OptimizeLakeRe(dir, zorderBy, orderBy, nFiles, whereSql) =>
-        def cols(s: String): Seq[String] =
-          Option(s).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        OptimizeLakeCommand(dir, cols(orderBy), cols(zorderBy),
-          Option(nFiles).map(_.toInt).getOrElse(1),
-          Option(whereSql).map(_.trim).filter(_.nonEmpty))
-      case CreateRefRe(refType, name, dir, version) =>
-        CreateRefCommand(refType.toLowerCase, name, dir, Option(version).map(_.toLong))
-      case DropRefRe(refType, name, dir) => DropRefCommand(refType.toLowerCase, name, dir)
-      case CreateSourceRe(ine, name, kind, props) =>
-        CreateSourceCommand(name, kind,
-          Option(props).map(p => PropPairRe.findAllMatchIn(p)
-            .map(m => m.group(1) -> m.group(2)).toMap).getOrElse(Map.empty),
-          ine != null, out("source", "type", "status", "message"))
-      case DropSourceRe(name) => DropSourceCommand(name)
-      case RefreshSourceStatusRe(name) =>
-        RefreshSourceStatusCommand(name, out("source", "status", "message"))
-      case ClearPermissionCacheRe(name) =>
-        ClearPermissionCacheCommand(name, out("source", "entries_dropped"))
-      case ShowSourcesRe(limit) =>
-        ShowSourcesCommand(Option(limit).map(_.toInt),
-          out("name", "type", "status", "message", "last_probe_ms"))
-      case ShowRefsRe(dir) =>
-        ShowRefsCommand(dir, out("name", "type", "base_version"))
-      case ShowRefsKindRe(kind, dir) =>
-        ShowRefsCommand(dir, out("name", "type", "base_version"),
-          kindFilter = Some(kind.toLowerCase.stripSuffix("s") match {
-            case "branche" => "branch"; case k => k
-          }))
-      case AssignRefRe(refType, name, version, dir) =>
-        AssignRefCommand(refType.toLowerCase, name, version.toLong, dir)
-      case AlterUserRe(name, password) =>
-        AlterUserCommand(name, password, out("user"))
-      case AddRowPolicyRe(view, fn, args) =>
-        PolicyCommand(view, "add_row", None, fn, splitArgs(args), out("dataset", "policy"))
-      case DropRowPolicyRe(view, fn) =>
-        PolicyCommand(view, "drop_row", None, fn, Nil, out("dataset", "policy"))
-      case SetMaskingRe(view, column, fn, args) =>
-        PolicyCommand(view, "set_mask", Some(column), fn, splitArgs(args),
-          out("dataset", "policy"))
-      case UnsetMaskingRe(view, column, fn) =>
-        PolicyCommand(view, "unset_mask", Some(column), fn, Nil,
-          out("dataset", "policy"))
-      case ShowPoliciesRe() =>
-        ShowPoliciesCommand(out("dataset", "kind", "policy"))
-      case MergeBranchRe(name, dir, dry) =>
-        if (dry != null) MergeBranchDryRunCommand(name, dir,
-          out("status", "detail"))
-        else MergeBranchCommand(name, dir)
-      case InsertLakeAtBranchRe(dir, branch, query) =>
-        InsertLakeAtBranchCommand(dir, branch, query)
-      case CreateLakeViewAtRe(name, dir, refName) =>
-        CreateLakeViewAtRefCommand(name, dir, refName)
-      case InsertLakeRe(dir, query) => InsertLakeCommand(dir, query)
-      // statement-level version context beats the session pin (reference
-      // precedence): AT BRANCH DML stages on the named branch explicitly
-      case DeleteLakeAtBranchRe(dir, branch, cond) =>
-        DeleteLakeCommand(dir, cond, atBranch = Some(branch))
-      case UpdateLakeAtBranchRe(dir, branch, rest) =>
-        val wi = GraftSqlParser.topLevelKeyword(rest, "WHERE")
-        require(wi > 0, s"UPDATE LAKE requires a WHERE clause: $t")
-        UpdateLakeCommand(dir, rest.take(wi).trim, rest.drop(wi + 5).trim,
-          atBranch = Some(branch))
-      case ExplainInsertLakeRe(dir, query) =>
-        ExplainLakeInsertCommand(dir, query,
-          out("mode", "partition_spec", "stats_columns", "sort_order",
-            "source_rows_estimate", "next_version"))
-      case ExplainMergeLakeRe(dir, key, rest) =>
-        ExplainLakeMergeCommand(dir, key, splitParenQuery(rest)._1,
-          out("mode", "files_total", "files_rewritten", "files_carried",
-            "rows_rewritten_max", "bytes_rewritten", "partial_rewrite"))
-      case ExplainDeleteLakeRe(dir, atBranch, cond) =>
-        ExplainLakeDmlCommand(dir, cond, "copy-on-write delete",
-          Option(atBranch),
-          out("mode", "files_total", "files_rewritten", "files_carried",
-            "rows_rewritten_max", "bytes_rewritten", "partial_rewrite"))
-      case ExplainUpdateLakeRe(dir, atBranch, rest) =>
-        // quote-aware split: a 'where' inside a SET string literal is
-        // data (same rule as the executing UPDATE form)
-        val wi = GraftSqlParser.topLevelKeyword(rest, "WHERE")
-        require(wi > 0, s"EXPLAIN UPDATE LAKE requires a WHERE clause: $t")
-        ExplainLakeDmlCommand(dir, rest.drop(wi + 5).trim, "copy-on-write update",
-          Option(atBranch),
-          out("mode", "files_total", "files_rewritten", "files_carried",
-            "rows_rewritten_max", "bytes_rewritten", "partial_rewrite"))
-      case DeleteLakeRe(dir, cond) => DeleteLakeCommand(dir, cond)
-      case UpdateLakeRe(dir, rest) =>
-        // quote-aware split: a 'where' inside a SET string literal is data
-        val wi = GraftSqlParser.topLevelKeyword(rest, "WHERE")
-        require(wi > 0, s"UPDATE LAKE requires a WHERE clause: $t")
-        UpdateLakeCommand(dir, rest.take(wi).trim, rest.drop(wi + 5).trim)
-      case MergeLakeOnRe(dir, key, rest) =>
-        val (querySql, clauseText) = splitParenQuery(rest)
-        val (matched, notMatched) = parseMergeClauses(clauseText)
-        MergeLakeClausesCommand(dir, key, querySql, matched, notMatched)
-      case MergeLakeRe(dir, key, query) => MergeLakeCommand(dir, key, query)
-      case LakeChangesViewRe(name, dir, fromV, toV) =>
-        LakeChangesViewCommand(name, dir, fromV.toLong, toV.toLong)
-      case RenameLakeColRe(dir, oldName, newName) =>
-        RenameLakeColumnCommand(dir, oldName, newName)
-      case AddLakeColRe(dir, name, typeDdl) => AddLakeColumnCommand(dir, name, typeDdl)
-      case ChangeLakeColRe(dir, oldName, newName, typeDdl) =>
-        ChangeLakeColumnCommand(dir, oldName, newName, typeDdl,
-          out("column", "type"))
-      case DropLakeColRe(dir, name) => DropLakeColumnCommand(dir, name)
-      case AlterLakeSetSpecRe(dir, spec) =>
-        SetLakePartitionSpecCommand(dir,
-          Option(spec).map(splitTopLevel).getOrElse(Nil))
-      case AlterLakeSetSortRe(dir, cols) =>
-        SetLakeSortOrderCommand(dir, splitCols(cols))
-      case AlterLakeRouteReflectionsRe(dir, dflt, queue) =>
-        RouteReflectionsCommand(dir, Option(dflt).isDefined, Option(queue),
-          out("path", "queue"))
-      case AlterLakeClusterByRe(dir, cols) =>
-        ClusterKeyCommand(dir, splitCols(cols), out("table", "cluster_key"))
-      case AlterLakeDropClusterRe(dir) =>
-        ClusterKeyCommand(dir, Nil, out("table", "cluster_key"))
-      case AlterLakeAddPkRe(dir, cols) =>
-        AlterLakePkCommand(dir,
-          cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-          out("table", "primary_key"))
-      case AlterLakeDropPkRe(dir) =>
-        AlterLakePkCommand(dir, Nil, out("table", "primary_key"))
-      case AlterLakeSetPropsRe(dir, pairs) =>
-        SetLakePropertiesCommand(dir,
-          PropPairRe.findAllMatchIn(pairs).map(m => m.group(1) -> m.group(2)).toMap)
-      case AlterLakeApproxRe(dir, toggle) =>
-        SetApproxStatsCommand(dir, toggle.equalsIgnoreCase("ENABLE"))
-      case AlterLakeUnsetPropsRe(dir, keys) =>
-        UnsetLakePropertiesCommand(dir,
-          PropKeyRe.findAllMatchIn(keys).map(_.group(1)).toSeq)
-      case ShowTblPropsRe(dir) =>
-        ShowLakePropertiesCommand(dir, out("key", "value"))
-      case RollbackLakeRe(dir, version) => RollbackLakeCommand(dir, version.toLong)
-      case ShowCreateViewRe(name) =>
-        ShowCreateViewCommand(name, out("view", "definition"))
-      case ShowCreateLakeRe(dir, ref) =>
-        ShowCreateLakeCommand(dir,
-          out("column_ddl", "partition_spec", "stats_cols", "sort_by",
-            "primary_key", "version"),
-          Option(ref))
-      case VacuumOrphanRe(dir, olderThan, location) =>
-        RemoveOrphanFilesCommand(dir,
-          Option(olderThan).map(parseTsMillis), Option(location))
-      case VacuumLakeRe(dir, olderThan, retain, grace) =>
-        VacuumLakeCommand(dir,
-          Option(retain).map(_.toInt).getOrElse(
-            if (olderThan != null) 1 else 2),
-          Option(grace).map(_.toLong).getOrElse(3600000L),
-          Option(olderThan).map(parseTsMillis))
-      case VacuumCatalogRe(root, olderThan, retain, grace) =>
-        VacuumCatalogCommand(root,
-          Option(retain).map(_.toInt).getOrElse(
-            if (olderThan != null) 1 else 2),
-          Option(grace).map(_.toLong).getOrElse(3600000L),
-          Option(olderThan).map(parseTsMillis),
-          out("table", "n_deleted"))
-      case ExportLakeRe(src, dst, version, partBy, format, append) =>
-        ExportLakeCommand(src, dst, Option(version).map(_.toLong),
-          splitCols(partBy),
-          Option(format).map(_.toUpperCase).getOrElse("ICEBERG"),
-          append != null)
-      case AnalyzeLakeRe(dir, forCols, compute, hist, _, buckets) =>
-        AnalyzeLakeCommand(dir,
-          out("col_name", "n_rows", "n_nulls", "ndv", "min_value", "max_value"),
-          persist = compute != null, histogram = hist != null,
-          buckets = Option(buckets).map(_.toInt).getOrElse(16),
-          columns = Option(forCols).map(
-            _.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil))
-      case CopyIntoRe(target, src, fmt, ddl, onError) =>
-        CopyIntoCommand(target, src, fmt.toLowerCase,
-          ddl, Option(onError).map(_.toLowerCase).getOrElse("continue"))
-      case _ if topLevelMatches(t, QualifyKw).nonEmpty =>
-        // QUALIFY <pred>: filter on window expressions after grouping — the
-        // Dremio/Snowflake/DuckDB clause Spark's parser lacks (reference:
-        // QUALIFY in dremio's calcite parser, `parserImpls.ftl`). Pure
-        // text rewrite, planned by Spark itself:
-        //   SELECT <list> FROM <rest> QUALIFY <pred> [ORDER BY ...] [LIMIT n]
-        // → SELECT * EXCEPT (__qualify) FROM
-        //     (SELECT <list>, (<pred>) AS __qualify FROM <rest>) AS __q
-        //   WHERE __qualify [ORDER BY ...] [LIMIT n]
-        // The predicate joins the ORIGINAL select list, so it sees the
-        // FROM clause's columns (QUALIFY's scope — not just the output)
-        // and, via lateral column aliases, the select-list aliases; its
-        // window functions evaluate over the post-grouping rows. Keyword
-        // scans are depth-0 and quote-aware, so subquery QUALIFYs and
-        // string literals never trigger the rewrite. Not supported: a
-        // QUALIFY directly on a top-level set operation (wrap the branch
-        // in a subquery instead).
-        val (qs, qe) = topLevelMatches(t, QualifyKw).last
-        val base = t.substring(0, qs).trim
-        val after = t.substring(qe).trim.stripSuffix(";")
-        val (pred, trailer) = topLevelMatches(after, TrailerKw).headOption.map(_._1) match {
-          case Some(i) => (after.substring(0, i).trim, after.substring(i).trim)
-          case None => (after, "")
-        }
-        require(pred.nonEmpty && base.nonEmpty, "QUALIFY needs a query and a predicate")
-        val fromPos = topLevelMatches(base, FromKw).headOption.map(_._1).getOrElse(
-          throw new IllegalArgumentException("QUALIFY requires a FROM clause"))
-        parsePlan(
-          s"SELECT * EXCEPT (__qualify) FROM (${base.substring(0, fromPos).trim}, " +
-            s"($pred) AS __qualify ${base.substring(fromPos)}) AS __q " +
-            s"WHERE __qualify $trailer")
-      case _ => fallback(sqlText)
-    }
+    val c = new Cursor(sqlText, runScriptPlan)
+    SqlGrammar.command(c).getOrElse(
+      SqlGrammar.qualifyRewrite(c).map(parsePlan).getOrElse(fallback(sqlText)))
   }
 
   override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
@@ -586,687 +77,8 @@ object GraftSqlParser {
     * `SystemSchemas.CLUSTERING_TABLE_PROPERTY` —
     * "use sort order as clustering columns"). */
   val ClusteringProp = "graft.clustering"
-  private val CreateExternalReflectionRe =
-    """(?is)CREATE\s+EXTERNAL\s+REFLECTION\s+(\w+)\s+USING\s+PATH\s+'([^']+)'\s+AS\s+(.+)""".r
-  private val CreateReflectionRe =
-    """(?is)CREATE\s+REFLECTION\s+(\w+)\s+USING\s+PATH\s+'([^']+)'\s+AS\s+(.+)""".r
-  private val DropReflectionRe = """(?is)DROP\s+REFLECTION\s+(\w+)\s*;?""".r
-  private val RefreshReflectionRe = """(?is)REFRESH\s+REFLECTION\s+(\w+)\s*;?""".r
-  // global dependency-ordered bulk refresh (reference ReflectionManager's
-  // full pass, ordered by services/accelerator DependencyGraph)
-  private val RefreshAllReflectionsRe = """(?is)REFRESH\s+REFLECTIONS\s*;?""".r
-  // the scheduler seam: refresh only goals whose REFRESH EVERY period has
-  // elapsed (an operator cron calls this; no background thread needed)
-  private val MaintainReflectionsRe = """(?is)MAINTAIN\s+REFLECTIONS\s*;?""".r
-  // per-goal refresh period (reference AccelerationSettings.refreshPeriod)
-  private val AlterReflectionPolicyRe =
-    """(?is)ALTER\s+REFLECTION\s+(\w+)\s+REFRESH\s+(?:EVERY\s+(\d+)\s+MINUTES?|(?:MANUAL))\s*;?""".r
-  // accelerator-internal: take an out-of-band rebuilt materialization live
-  // (reference $LOAD MATERIALIZATION METADATA, LoadMaterializationHandler)
-  private val LoadMaterializationRe =
-    """(?is)LOAD\s+MATERIALIZATION\s+(\w+)\s*;?""".r
-  // bulk per-dataset refresh (reference SqlRefreshReflectionsForDataset,
-  // alter.ftl:198 — ALTER TABLE t REFRESH REFLECTIONS)
-  private val RefreshReflectionsForRe =
-    """(?is)ALTER\s+(?:LAKE|TABLE)\s+'([^']+)'\s+REFRESH\s+REFLECTIONS\s*;?""".r
-  // forget the dataset definition without touching data (reference
-  // SqlForgetTable, alter.ftl:200 — ALTER TABLE t FORGET METADATA)
-  private val ForgetMetadataRe =
-    """(?is)ALTER\s+(?:TABLE|PDS|DATASET)\s+([\w.]+)\s+FORGET\s+METADATA\s*;?""".r
-  private val ShowReflectionsRe = """(?is)SHOW\s+REFLECTIONS\s*;?""".r
-  // optional event-driven tail (reference ingestion.ftl:190-214):
-  // NOTIFICATION_PROVIDER <name> NOTIFICATION_QUEUE_REFERENCE '<ref>' —
-  // TRIGGER then loads exactly the files named by pending queue events
-  // instead of listing the source directory (graft.streaming.Notifications)
-  private val NotifyTail =
-    """(?:\s+NOTIFICATION_PROVIDER\s+(\w+)\s+NOTIFICATION_QUEUE_REFERENCE\s+'([^']+)')?"""
-  // optional bounded dedup memory (reference ingestion.ftl:
-  // DEDUPE_LOOKBACK_PERIOD <days>) — after the window a re-arriving file
-  // re-ingests; notified pipes trim their loaded-files log, listing
-  // pipes map it to the file source's maxFileAge
-  private val LookbackHead = """(?:\s+DEDUPE_LOOKBACK_PERIOD\s+(\d+))?"""
-  // optional ingest gate (Delta Live Tables' EXPECT surface, wired to
-  // graft.operators.Expectations): EXPECT <name> AS (<pred>)
-  // [ON VIOLATION WARN|DROP|FAIL][, ...] — drop/fail violators land in
-  // the quarantine table beside the target, FAIL aborts the trigger
-  private val ExpectTail = """(?:\s+EXPECT\s+(.+?))?"""
-  private val ExpectDefRe =
-    """(?is)\s*(\w+)\s+AS\s+\((.+)\)(?:\s+ON\s+VIOLATION\s+(\w+))?\s*""".r
 
-  /** Parse the EXPECT clause list: comma-split at paren depth 0, each
-    * `name AS (<pred>) [ON VIOLATION action]` (default WARN). */
-  private def parseExpectations(raw: String): Seq[graft.streaming.PipeExpectation] = {
-    val parts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false // SQL single-quoted literal; '' is the escape
-    raw.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case '(' if !inQuote => depth += 1; cur += '('
-      case ')' if !inQuote => depth -= 1; cur += ')'
-      case ',' if !inQuote && depth == 0 => parts += cur.result(); cur.clear()
-      case c => cur += c
-    }
-    parts += cur.result()
-    parts.result().map(_.trim).filter(_.nonEmpty).map {
-      case ExpectDefRe(name, pred, action) =>
-        graft.streaming.PipeExpectation(name, pred.trim,
-          Option(action).map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("warn"))
-      case other => throw new IllegalArgumentException(
-        s"cannot parse EXPECT clause: $other (want: <name> AS (<predicate>) [ON VIOLATION WARN|DROP|FAIL])")
-    }
-  }
-  private val CreatePipeRe =
-    ("""(?is)CREATE\s+PIPE\s+(\w+)""" + LookbackHead +
-      """\s+FROM\s+'([^']+)'\s+FORMAT\s+(\w+)\s+""" +
-      """SCHEMA\s+'([^']+)'\s+INTO\s+'([^']+)'\s+CHECKPOINT\s+'([^']+)'""" +
-      ExpectTail + NotifyTail + """\s*;?""").r
-  // lake-SOURCE pipes: incremental replication over the snapshot log —
-  // TRIGGER ships source commits (checkpointed, latest] into the target
-  // (append flavor: one tagged commit; MERGE KEY flavor: row-level CDC)
-  private val CreateLakeSrcCdcPipeRe =
-    ("""(?is)CREATE\s+PIPE\s+(\w+)\s+FROM\s+LAKE\s+'([^']+)'\s+""" +
-      """MERGE\s+KEY\s+(\w+)\s+INTO\s+LAKE\s+'([^']+)'\s+CHECKPOINT\s+'([^']+)'\s*;?""").r
-  private val CreateLakeSrcPipeRe =
-    ("""(?is)CREATE\s+PIPE\s+(\w+)\s+FROM\s+LAKE\s+'([^']+)'\s+""" +
-      """INTO\s+LAKE\s+'([^']+)'\s+CHECKPOINT\s+'([^']+)'\s*;?""").r
-  // CDC upsert pipe: each TRIGGER merges arriving batches into the lake
-  // table by key (reference ingestion grammar `ingestion.ftl`,
-  // `Parser.tdd:624`)
-  private val CreateCdcPipeRe =
-    ("""(?is)CREATE\s+PIPE\s+(\w+)\s+FROM\s+'([^']+)'\s+FORMAT\s+(\w+)\s+""" +
-      """SCHEMA\s+'([^']+)'\s+MERGE\s+KEY\s+(\w+)\s+INTO\s+LAKE\s+'([^']+)'\s+CHECKPOINT\s+'([^']+)'""" +
-      ExpectTail + """\s*;?""").r
-  // append pipe landing each batch as one atomic tagged lake commit
-  private val CreateLakePipeRe =
-    ("""(?is)CREATE\s+PIPE\s+(\w+)""" + LookbackHead +
-      """\s+FROM\s+'([^']+)'\s+FORMAT\s+(\w+)\s+""" +
-      """SCHEMA\s+'([^']+)'\s+INTO\s+LAKE\s+'([^']+)'\s+CHECKPOINT\s+'([^']+)'""" +
-      ExpectTail + NotifyTail + """\s*;?""").r
-  // FOR BATCH <gen>: manual retry of one recorded ingestion batch
-  // (reference SqlTriggerPipe's optional FOR BATCH arm, ingestion.ftl:308)
-  private val TriggerPipeRe =
-    """(?is)TRIGGER\s+PIPE\s+(\w+)(?:\s+FOR\s+BATCH\s+(\d+))?\s*;?""".r
-  private val ShowPipesRe = """(?is)SHOW\s+PIPES\s*;?""".r
-  private val ShowStreamsRe = """(?is)SHOW\s+STREAMS\s*;?""".r
-  // pipe lifecycle (reference ingestion.ftl: SqlAlterPipeStatus,
-  // SqlAlterPipe, SqlDropPipe, SqlDescribePipe)
-  private val AlterPipeStatusRe =
-    """(?is)ALTER\s+PIPE\s+(\w+)\s+SET\s+PIPE_EXECUTION_RUNNING\s*=\s*(TRUE|FALSE)\s*;?""".r
-  private val AlterPipeDefRe = """(?is)ALTER\s+PIPE\s+\w+\s+FROM\s+.+""".r
-  private val DropPipeRe =
-    """(?is)DROP\s+PIPE\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?""".r
-  private val DescribePipeRe = """(?is)DESC(?:RIBE)?\s+PIPE\s+(\w+)\s*;?""".r
-  // session version context + lake statement forms (reference
-  // versionSupport.ftl SqlUseVersion/SqlShowLogs, parserImpls.ftl
-  // SqlShowFiles, Parser.tdd SqlTruncateTable)
-  private val UseRefRe =
-    """(?is)USE\s+(BRANCH|TAG)\s+([\w.-]+)\s+IN\s+LAKE\s+'([^']+)'\s*;?""".r
-  // USE VERSION n (reference USE COMMIT — pin reads at a fixed version)
-  private val UseVersionRe =
-    """(?is)USE\s+VERSION\s+(\d+)\s+IN\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val UseDefaultRe =
-    """(?is)USE\s+DEFAULT\s+IN\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val ShowLogsRe =
-    ("""(?is)SHOW\s+LOGS?(?:\s+AT\s+(BRANCH|TAG)\s+([\w.-]+))?""" +
-      """\s+IN\s+LAKE\s+'([^']+)'\s*;?""").r
-  private val ShowFilesLakeRe =
-    """(?is)SHOW\s+FILES\s+IN\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val TruncateLakeRe =
-    """(?is)TRUNCATE\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val ClearResultCacheRe = """(?is)(?:ALTER\s+SESSION\s+)?CLEAR\s+RESULT\s+CACHE\s*;?""".r
-  private val ClearPlanCacheRe = """(?is)(?:ALTER\s+SESSION\s+)?CLEAR\s+PLAN\s+CACHE\s*;?""".r
-  private val ExplainAccelRe = """(?is)EXPLAIN\s+ACCELERATION\s+(.+)""".r
-  // EXPLAIN JSON [phase] FOR <query> (reference explainjson.ftl):
-  // machine-readable plan dump at a named planner phase
-  private val ExplainJsonRe =
-    """(?is)EXPLAIN\s+JSON\s+(?:(\w+)\s+)?FOR\s+(.+)""".r
-  // catalog folders (reference parserImpls.ftl SqlCreateFolder/SqlDropFolder):
-  // organizational namespaces — the Spark-native mapping is a namespace in
-  // the session catalog
-  private val CreateFolderRe =
-    """(?is)CREATE\s+FOLDER\s+(?:(IF\s+NOT\s+EXISTS)\s+)?([\w.]+)\s*;?""".r
-  private val DropFolderRe =
-    """(?is)DROP\s+FOLDER\s+(?:(IF\s+EXISTS)\s+)?([\w.]+)\s*;?""".r
-  private val CreateQueueRe =
-    """(?is)CREATE\s+QUEUE\s+([\w.-]+)\s+SLOTS\s+(\d+)(?:\s+TIMEOUT\s+(\d+))?\s*;?""".r
-  // ALTER QUEUE (reference SqlAlterEngine: resize an execution engine's
-  // replica band — the queue-slot analog) + COMPACT MATERIALIZATION
-  // (reference SqlCompactMaterialization: merge refresh deltas)
-  private val AlterQueueRe =
-    """(?is)ALTER\s+QUEUE\s+([\w.-]+)\s+SLOTS\s+(\d+)(?:\s+TIMEOUT\s+(\d+))?\s*;?""".r
-  // reference SqlAlterEngine (parserImpls.ftl:1877): ALTER ENGINE <name>
-  // SET (MIN_REPLICAS = n, MAX_REPLICAS = m) — either key, either order;
-  // the paren body is validated by the command
-  private val AlterEngineRe =
-    """(?is)ALTER\s+ENGINE\s+([\w.-]+)\s+SET\s*\(([^)]*)\)\s*;?""".r
-  private val ShowEnginesRe = """(?is)SHOW\s+ENGINES\s*;?""".r
-  private val CompactMaterializationRe =
-    """(?is)COMPACT\s+MATERIALIZATION\s+(\w+)(?:\s+INTO\s+(\d+)\s+FILES)?\s*;?""".r
-  private val DropQueueRe = """(?is)DROP\s+QUEUE\s+([\w.-]+)\s*;?""".r
-  private val ShowQueuesRe = """(?is)SHOW\s+QUEUES\s*;?""".r
-  // table properties (reference SqlAlterTableProperties / parserImpls.ftl
-  // SHOW TBLPROPERTIES, SqlShowTableProperties.java)
-  // the spec list nests one paren level (transform argument lists)
-  private val AlterLakeSetSpecRe =
-    ("""(?is)ALTER\s+LAKE\s+'([^']+)'\s+SET\s+PARTITION\s+SPEC\s*""" +
-      """\(((?:[^()]*\([^()]*\))*[^()]*)\)\s*;?""").r
-  private val AlterLakeSetSortRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+SET\s+SORT\s+ORDER\s*\(([^)]*)\)\s*;?""".r
-  // informational PRIMARY KEY metadata (reference
-  // SqlAlterTableAddPrimaryKey / SqlAlterTableDropPrimaryKey, alter.ftl)
-  // per-dataset AND per-folder reflection routing (reference
-  // SqlAlterDatasetReflectionRouting, alter.ftl:625 — RoutingType
-  // TABLE|FOLDER|SPACE; a FOLDER route here is a path-prefix route and
-  // the dataset's own route wins over any ancestor's)
-  private val AlterLakeRouteReflectionsRe =
-    ("""(?is)ALTER\s+(?:LAKE|FOLDER)\s+'([^']+)'\s+ROUTE\s+(?:ALL\s+)?REFLECTIONS\s+TO\s+""" +
-      """(?:(DEFAULT)\s+)?(?:QUEUE|ENGINE)(?:\s+([\w.-]+))?\s*;?""").r
-  // clustering keys (reference SqlAlterTableClusterKey, alter.ftl:280 +
-  // AlterTableClusterKeyHandler: CLUSTER BY sets the sort order AND a
-  // clustering table property; OPTIMIZE then rewrites clustered)
-  private val AlterLakeClusterByRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+CLUSTER\s+BY\s*\(([^)]*)\)\s*;?""".r
-  private val AlterLakeDropClusterRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+DROP\s+CLUSTERING\s+KEY\s*;?""".r
-  private val AlterLakeAddPkRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+ADD\s+PRIMARY\s+KEY\s*\(([^)]*)\)\s*;?""".r
-  private val AlterLakeDropPkRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+DROP\s+PRIMARY\s+KEY\s*;?""".r
-  private val AlterLakeSetPropsRe =
-    ("""(?is)ALTER\s+LAKE\s+'([^']+)'\s+SET\s+TBLPROPERTIES\s*""" +
-      """\(\s*((?:'[^']*'\s*=\s*'[^']*'\s*,?\s*)+)\)\s*;?""").r
-  // reference SqlSetApprox (alter.ftl:242,260): per-table opt-in to
-  // NDV-sketch COUNT(DISTINCT) planning
-  private val AlterLakeApproxRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+(ENABLE|DISABLE)\s+APPROXIMATE\s+STATS\s*;?""".r
-  private val AlterLakeUnsetPropsRe =
-    ("""(?is)ALTER\s+LAKE\s+'([^']+)'\s+UNSET\s+TBLPROPERTIES\s*""" +
-      """\(\s*((?:'[^']*'\s*,?\s*)+)\)\s*;?""").r
-  private val ShowTblPropsRe =
-    """(?is)SHOW\s+TBLPROPERTIES\s+IN\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val PropPairRe = """'([^']*)'\s*=\s*'([^']*)'""".r
-  // ---- named external sources (reference dac SourceResource lifecycle;
-  // ALTER SOURCE statements are SQL grammar: alter.ftl:58-60
-  // SqlRefreshSourceStatus / SqlClearSourcePermissionCache) ----
-  private val CreateSourceRe =
-    ("""(?is)CREATE\s+SOURCE\s+(?:(IF\s+NOT\s+EXISTS)\s+)?([\w.-]+)\s+TYPE\s+(\w+)""" +
-      """(?:\s*\(\s*((?:'[^']*'\s*=\s*'[^']*'\s*,?\s*)*)\))?\s*;?""").r
-  private val DropSourceRe = """(?is)DROP\s+SOURCE\s+([\w.-]+)\s*;?""".r
-  private val RefreshSourceStatusRe =
-    """(?is)ALTER\s+SOURCE\s+([\w.-]+)\s+REFRESH\s+STATUS\s*;?""".r
-  private val ClearPermissionCacheRe =
-    """(?is)ALTER\s+SOURCE\s+([\w.-]+)\s+CLEAR\s+PERMISSION\s+CACHE\s*;?""".r
-  private val ShowSourcesRe = """(?is)SHOW\s+SOURCES(?:\s+LIMIT\s+(\d+))?\s*;?""".r
-  private val PropKeyRe = """'([^']*)'""".r
-  // rule-based queue routing (reference RuleBasedEngineSelector.java:22)
-  private val CreateRoutingRuleRe =
-    ("""(?is)CREATE\s+ROUTING\s+RULE\s+([\w.-]+)\s+PRIORITY\s+(\d+)\s+""" +
-      """WHEN\s+(.+?)\s+ROUTE\s+TO\s+([\w.-]+)\s*;?""").r
-  private val DropRoutingRuleRe =
-    """(?is)DROP\s+ROUTING\s+RULE\s+([\w.-]+)\s*;?""".r
-  private val ShowRoutingRulesRe = """(?is)SHOW\s+ROUTING\s+RULES\s*;?""".r
-  private val CancelQueryRe = """(?is)CANCEL\s+QUERY\s+(\d+)\s*;?""".r
-  // ---- users / roles / privileges (reference Parser.tdd:656-660 —
-  // SqlCreateUser/SqlCreateRole/SqlGrant; grant.ftl, role.ftl) ----
-  private val CreateUserRe =
-    """(?is)CREATE\s+USER\s+([\w.-]+)\s+PASSWORD\s+'([^']*)'(\s+ADMIN)?\s*;?""".r
-  private val DropUserRe = """(?is)DROP\s+USER\s+([\w.-]+)\s*;?""".r
-  private val CreateRoleRe = """(?is)CREATE\s+ROLE\s+([\w.-]+)\s*;?""".r
-  private val DropRoleRe = """(?is)DROP\s+ROLE\s+([\w.-]+)\s*;?""".r
-  private val GrantRoleRe =
-    """(?is)GRANT\s+ROLE\s+([\w.-]+)\s+TO\s+USER\s+([\w.-]+)\s*;?""".r
-  private val RevokeRoleRe =
-    """(?is)REVOKE\s+ROLE\s+([\w.-]+)\s+FROM\s+USER\s+([\w.-]+)\s*;?""".r
-  // object: a bare name (table/view/*) or a quoted path (lake dir);
-  // privilege list per the reference grant.ftl (SELECT/INSERT/UPDATE/
-  // DELETE/ALTER/DROP/EXECUTE, or ALL)
-  private val GrantRe =
-    ("""(?is)GRANT\s+(SELECT|INSERT|UPDATE|DELETE|ALTER|DROP|EXECUTE|ALL)\s+ON\s+(?:'([^']+)'|([\w.*/]+))\s+""" +
-      """TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  // GRANT/REVOKE ... ON BRANCH|TAG ref IN CATALOG '<dir>' (reference
-  // SqlGrantOnReference/SqlRevokeOnReference, grant.ftl:240-256 — parsed
-  // but refused in the OSS edition, CommandCreator.java:669; we implement
-  // the semantics: COMMIT = branch-scoped writes, USAGE = ref-pinned reads)
-  private val GrantOnRefRe =
-    ("""(?is)GRANT\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+(BRANCH|TAG)\s+([\w.-]+)\s+""" +
-      """IN\s+CATALOG\s+'([^']+)'\s+TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val RevokeOnRefRe =
-    ("""(?is)REVOKE\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+(BRANCH|TAG)\s+([\w.-]+)\s+""" +
-      """IN\s+CATALOG\s+'([^']+)'\s+FROM\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  // GRANT/REVOKE ... ON CATALOG '<dir>' (SqlGrantCatalog):
-  // CREATE_BRANCH/CREATE_TAG gate ref creation on the table
-  private val GrantOnCatalogRe =
-    ("""(?is)GRANT\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+CATALOG\s+'([^']+)'\s+""" +
-      """TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val RevokeOnCatalogRe =
-    ("""(?is)REVOKE\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+CATALOG\s+'([^']+)'\s+""" +
-      """FROM\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val ShowGrantsOnRefRe =
-    """(?is)SHOW\s+GRANTS\s+ON\s+(BRANCH|TAG)\s+([\w.-]+)\s+IN\s+CATALOG\s+'([^']+)'\s*;?""".r
-  // ---- saved SQL scripts (reference services/script ScriptServiceImpl;
-  // GRANT ON SCRIPT = SqlGrantOnScript, grant.ftl:191; privileges
-  // VIEW/MODIFY/DELETE/MANAGE_GRANTS). Content is a single-quoted SQL
-  // string with '' escaping. ----
-  private val CreateScriptRe =
-    """(?is)CREATE\s+SCRIPT\s+([\w.-]+)\s+AS\s+'((?:[^']|'')*)'\s*;?""".r
-  private val AlterScriptRe =
-    """(?is)ALTER\s+SCRIPT\s+([\w.-]+)\s+AS\s+'((?:[^']|'')*)'\s*;?""".r
-  private val DropScriptRe = """(?is)DROP\s+SCRIPT\s+([\w.-]+)\s*;?""".r
-  private val DescribeScriptRe =
-    """(?is)DESCRIBE\s+SCRIPT\s+([\w.-]+)\s*;?""".r
-  private val RunScriptRe = """(?is)RUN\s+SCRIPT\s+([\w.-]+)\s*;?""".r
-  private val ShowScriptsRe = """(?is)SHOW\s+SCRIPTS(?:\s+LIMIT\s+(\d+))?\s*;?""".r
-  // GRANT ... ON ALL DATASETS IN FOLDER|SOURCE (grant.ftl:215
-  // SqlGrantOnAllDatasets): one container grant covers the subtree
-  private val GrantAllDatasetsRe =
-    ("""(?is)GRANT\s+(SELECT|INSERT|UPDATE|DELETE|ALTER|DROP|ALL)\s+ON\s+ALL\s+DATASETS\s+IN\s+""" +
-      """(FOLDER|SOURCE)\s+(?:'([^']+)'|([\w.-]+))\s+TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val RevokeAllDatasetsRe =
-    ("""(?is)REVOKE\s+(SELECT|INSERT|UPDATE|DELETE|ALTER|DROP|ALL)\s+ON\s+ALL\s+DATASETS\s+IN\s+""" +
-      """(FOLDER|SOURCE)\s+(?:'([^']+)'|([\w.-]+))\s+FROM\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val ShowGrantsOnScriptRe =
-    """(?is)SHOW\s+GRANTS\s+ON\s+SCRIPT\s+([\w.-]+)\s*;?""".r
-  private val GrantOnScriptRe =
-    ("""(?is)GRANT\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+SCRIPT\s+([\w.-]+)\s+""" +
-      """TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val RevokeOnScriptRe =
-    ("""(?is)REVOKE\s+([A-Z_]+(?:\s*,\s*[A-Z_]+)*)\s+ON\s+SCRIPT\s+([\w.-]+)\s+""" +
-      """FROM\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  // GRANT OWNERSHIP (reference SqlGrantOwnership, grant.ftl:708): transfer
-  // an object's owner; owners hold every privilege on it and may
-  // GRANT/REVOKE on it — delegated administration
-  private val GrantOwnershipRe =
-    ("""(?is)GRANT\s+OWNERSHIP\s+ON\s+(?:'([^']+)'|([\w.*/]+))\s+""" +
-      """TO\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val ShowGrantsOnRe =
-    """(?is)SHOW\s+GRANTS\s+ON\s+(?:'([^']+)'|([\w.*/]+))\s*;?""".r
-  private val RevokeRe =
-    ("""(?is)REVOKE\s+(SELECT|INSERT|UPDATE|DELETE|ALTER|DROP|EXECUTE|ALL)\s+ON\s+(?:'([^']+)'|([\w.*/]+))\s+""" +
-      """FROM\s+(USER|ROLE)\s+([\w.-]+)\s*;?""").r
-  private val AuthenticateRe =
-    """(?is)AUTHENTICATE\s+USER\s+([\w.-]+)\s+PASSWORD\s+'([^']*)'\s*;?""".r
-  private val ShowGrantsRe = """(?is)SHOW\s+GRANTS(?:\s+FOR\s+([\w.-]+))?\s*;?""".r
-  private val AlterAuthRe = """(?is)ALTER\s+AUTH\s+ENFORCE\s+(ON|OFF)\s*;?""".r
-  private val RefreshMetadataRe =
-    """(?is)ALTER\s+TABLE\s+(?:`([^`]+)`|([\w./]+))\s+REFRESH\s+METADATA\s*;?""".r
-  // REFRESH DATASET (reference SqlRefreshDataset, parserImpls.ftl:1475):
-  // incremental maintenance of a promoted dataset's file index. The
-  // clause tail is shared with the ALTER form (SqlRefreshTable,
-  // alter.ftl `ALTER TABLE ... REFRESH METADATA FOR ...`) — same
-  // options, same handler in the reference.
-  private val RefreshTail =
-    """(?:\s+FOR\s+ALL\s+(?:FILES|PARTITIONS))?""" +
-      """(?:\s+FOR\s+FILES\s*\(\s*((?:'[^']*'\s*,?\s*)+)\))?""" +
-      """(?:\s+FOR\s+PARTITIONS\s*\(\s*([^)]*)\))?""" +
-      """(?:\s+FOR\s+REGEX\s+'([^']*)')?""" +
-      """(?:\s+(AUTO|AVOID)\s+PROMOTION)?""" +
-      """(?:\s+(FORCE|LAZY)\s+UPDATE)?""" +
-      """(?:\s+(DELETE|MAINTAIN)\s+WHEN\s+MISSING)?""" +
-      """(\s+ERROR\s+ON\s+CONCURRENT\s+REFRESH)?\s*;?"""
-  private val RefreshDatasetRe =
-    ("""(?is)REFRESH\s+DATASET\s+(?:'([^']+)'|([\w]+))""" + RefreshTail).r
-  // the ALTER spelling of the same statement — SCOPED forms only (the
-  // bare ALTER ... REFRESH METADATA keeps its broader legacy handler:
-  // promotions AND path datasets)
-  private val AlterRefreshScopedRe =
-    ("""(?is)ALTER\s+(?:TABLE|PDS|DATASET)\s+(?:'([^']+)'|([\w]+))""" +
-      """\s+REFRESH\s+METADATA(?=\s+(?:FOR|AUTO|AVOID|FORCE|LAZY|DELETE|MAINTAIN|ERROR)\b)""" +
-      RefreshTail).r
-  private val PartSpecPairRe = """(\w+)\s*=\s*'([^']*)'""".r
-  // per-dataset acceleration toggle (reference SqlAccelToggle, alter.ftl:
-  // ALTER <dataset> ENABLE|DISABLE RAW|AGGREGATE ACCELERATION)
-  private val AccelToggleRe =
-    ("""(?is)ALTER\s+(?:TABLE|LAKE|PDS|VDS|DATASET)\s+(?:'([^']+)'|([\w./]+))\s+""" +
-      """(ENABLE|DISABLE)\s+(RAW|AGGREGATE)\s+ACCELERATION\s*;?""").r
-  // schema learning toggle for promoted datasets (reference
-  // SqlAlterTableToggleSchemaLearning / ...Handler.java)
-  private val ToggleSchemaLearnRe =
-    ("""(?is)ALTER\s+(?:TABLE|PDS|DATASET)\s+([\w.]+)\s+""" +
-      """(ENABLE|DISABLE)\s+SCHEMA\s+LEARNING\s*;?""").r
-  // Declarative reflection DDL (reference `alter.ftl:434,591` — ALTER
-  // TABLE ... CREATE AGGREGATE|RAW REFLECTION with DIMENSIONS/MEASURES/
-  // DISPLAY field lists + layout clauses). USING PATH names the
-  // materialization dir (ours is file-addressed where the reference's
-  // reflection store is managed).
-  private val CreateAggReflectionRe =
-    ("""(?is)ALTER\s+TABLE\s+([\w.]+)\s+CREATE\s+AGGREGATE\s+REFLECTION\s+(\w+)\s+""" +
-      """USING\s+PATH\s+'([^']+)'\s+DIMENSIONS\s*\(([^)]*)\)\s+MEASURES\s*\(([^)]*)\)""" +
-      """(?:\s+PARTITION\s+BY\s*\(([^)]*)\))?\s*;?""").r
-  private val CreateRawReflectionRe =
-    ("""(?is)ALTER\s+TABLE\s+([\w.]+)\s+CREATE\s+RAW\s+REFLECTION\s+(\w+)\s+""" +
-      """USING\s+PATH\s+'([^']+)'\s+DISPLAY\s*\(([^)]*)\)""" +
-      """(?:\s+PARTITION\s+BY\s*\(([^)]*)\))?\s*;?""").r
-
-  /** Comma-split a (possibly null) DDL column list. */
-  private def splitCols(s: String): Seq[String] =
-    Option(s).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-  private val DescribeLakeRe =
-    ("""(?is)DESCRIBE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+AT\s+(?:BRANCH|TAG)\s+([\w.-]+))?\s*;?""").r
-  private val CreateLakeViewRe =
-    ("""(?is)CREATE\s+LAKE\s+VIEW\s+(\w+)\s+FROM\s+'([^']+)'""" +
-      """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')?\s*;?""").r
-  // the PARTITION BY list nests one paren level (transform argument lists)
-  private val CreateLakeTableRe =
-    ("""(?is)CREATE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+PARTITION\s+BY\s+\(((?:[^()]*\([^()]*\))*[^()]*)\))?""" +
-      """(?:\s+DISTRIBUTE\s+BY\s+\(([^)]*)\))?""" +
-      """(?:\s+STATS\s+\(([^)]*)\))?""" +
-      """(?:\s+(?:SORT|LOCALSORT)\s+BY\s+\(([^)]*)\))?""" +
-      """(?:\s+CLUSTER\s+BY\s+\(([^)]*)\))?""" +
-      """(?:\s+WITH\s+(SINGLE)\s+WRITER)?\s+AS\s+(.+?)\s*;?""").r
-  private val ShowCreateLakeRe =
-    ("""(?is)SHOW\s+CREATE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+AT\s+(?:BRANCH|TAG)\s+([\w.-]+))?\s*;?""").r
-  // reference SqlShowCreate's VIEW arm (parserImpls.ftl:1834)
-  private val ShowCreateViewRe =
-    """(?is)SHOW\s+CREATE\s+(?:LAKE\s+)?VIEW\s+(\w+)\s*;?""".r
-  // expire old snapshots + delete unreferenced data files (Iceberg
-  // expire_snapshots / Delta VACUUM); GRACE (ms) keeps young orphans for
-  // in-flight writers — sub-hour values are for tests
-  private val VacuumLakeRe =
-    ("""(?is)VACUUM\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+OLDER_THAN\s+'([^']+)')?""" +
-      """(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?(?:\s+GRACE\s+(\d+))?\s*;?""").r
-  // orphan sweep without history expiry (reference SqlVacuumTable's
-  // REMOVE ORPHAN FILES branch, VacuumTableRemoveOrphanFilesOptions)
-  private val VacuumOrphanRe =
-    ("""(?is)VACUUM\s+LAKE\s+'([^']+)'\s+REMOVE\s+ORPHAN\s+FILES""" +
-      """(?:\s+OLDER_THAN\s+'([^']+)')?""" +
-      """(?:\s+LOCATION\s+'([^']+)')?\s*;?""").r
-  // catalog-wide sweep (reference SqlVacuumCatalog — `VACUUM CATALOG c`
-  // expires + orphan-sweeps EVERY table in the catalog): every graft-lake
-  // table under the root, authorization checked for ALL tables BEFORE the
-  // first deletion (a half-vacuumed catalog helps nobody)
-  private val VacuumCatalogRe =
-    ("""(?is)VACUUM\s+CATALOG\s+'([^']+)'""" +
-      """(?:\s+OLDER_THAN\s+'([^']+)')?""" +
-      """(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?(?:\s+GRACE\s+(\d+))?\s*;?""").r
-  // interop bridge: snapshot → plain parquet + Iceberg v2 metadata tree
-  // (reference `exec/store/iceberg/` — table layout served to external
-  // readers; see sources.LakeExport)
-  private val ExportLakeRe =
-    ("""(?is)EXPORT\s+LAKE\s+'([^']+)'\s+TO\s+'([^']+)'""" +
-      """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
-      """(?:\s+PARTITION\s+BY\s*\(([^)]*)\))?""" +
-      """(?:\s+FORMAT\s+(ICEBERG|DELTA))?(?:\s+(APPEND))?\s*;?""").r
-  // reference SqlOptimize's two explicit arms (parserImpls.ftl:1542):
-  // REWRITE MANIFESTS (metadata-only checkpoint) and REWRITE DATA USING
-  // BIN_PACK with FOR PARTITIONS / size options
-  private val OptimizeManifestsRe =
-    """(?is)OPTIMIZE\s+LAKE\s+'([^']+)'\s+REWRITE\s+MANIFESTS\s*;?""".r
-  private val OptimizeRewriteDataRe =
-    ("""(?is)OPTIMIZE\s+LAKE\s+'([^']+)'\s+REWRITE\s+DATA""" +
-      """(?:\s+USING\s+BIN_PACK)?""" +
-      """(?:\s+FOR\s+PARTITIONS\s+\((.+?)\))?""" +
-      """(?:\s*\(([^)]*=[^)]*)\))?\s*;?""").r
-  private val OptimizeLakeRe =
-    ("""(?is)OPTIMIZE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+ZORDER\s+BY\s+\(([^)]*)\))?""" +
-      """(?:\s+ORDER\s+BY\s+([\w\s,.]+?))?(?:\s+INTO\s+(\d+)\s+FILES)?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?""").r
-
-  /** `TIMESTAMP AS OF` accepts epoch millis or an ISO date/datetime
-    * (interpreted in UTC, the engine's session timezone). */
-  private def parseTsMillis(s: String): Long = {
-    val t = s.trim
-    if (t.matches("\\d+")) t.toLong
-    else {
-      val norm = if (t.contains("T") || t.contains(" ")) t.replace(' ', 'T') else t + "T00:00:00"
-      java.time.LocalDateTime.parse(norm)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    }
-  }
-  private val InsertLakeRe =
-    """(?is)INSERT\s+INTO\s+LAKE\s+'([^']+)'\s+(.+?)\s*;?""".r
-  private val DeleteLakeRe =
-    """(?is)DELETE\s+FROM\s+LAKE\s+'([^']+)'\s+WHERE\s+(.+?)\s*;?""".r
-  // EXPLAIN [PLAN FOR] lake DML (reference SqlExplainQueryDML,
-  // parserImpls.ftl:1726 — EXPLAIN PLAN FOR INSERT|DELETE|UPDATE): the
-  // copy-on-write analysis without execution
-  private val ExplainDeleteLakeRe =
-    ("""(?is)EXPLAIN\s+(?:PLAN\s+FOR\s+)?DELETE\s+FROM\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+AT\s+BRANCH\s+([\w.-]+))?\s+WHERE\s+(.+?)\s*;?""").r
-  // the UPDATE tail is captured whole and split on the TOP-LEVEL WHERE
-  // by the dispatch (a 'where' inside a SET string literal is data —
-  // same rule as the executing form)
-  private val ExplainUpdateLakeRe =
-    ("""(?is)EXPLAIN\s+(?:PLAN\s+FOR\s+)?UPDATE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+AT\s+BRANCH\s+([\w.-]+))?\s+SET\s+(.+?)\s*;?""").r
-  private val ExplainMergeLakeRe =
-    ("""(?is)EXPLAIN\s+(?:PLAN\s+FOR\s+)?MERGE\s+INTO\s+LAKE\s+'([^']+)'""" +
-      """\s+ON\s+(\w+)\s+USING\s+(.+)""").r
-  private val ExplainInsertLakeRe =
-    ("""(?is)EXPLAIN\s+(?:PLAN\s+FOR\s+)?INSERT\s+INTO\s+LAKE\s+'([^']+)'""" +
-      """\s+(.+?)\s*;?""").r
-  private val UpdateLakeRe =
-    """(?is)UPDATE\s+LAKE\s+'([^']+)'\s+SET\s+(.+?)\s*;?""".r
-  private val MergeLakeRe =
-    """(?is)MERGE\s+INTO\s+LAKE\s+'([^']+)'\s+KEY\s+(\w+)\s+USING\s+(.+?)\s*;?""".r
-  private val MergeLakeOnRe =
-    """(?is)MERGE\s+INTO\s+LAKE\s+'([^']+)'\s+ON\s+(\w+)\s+USING\s+(.+)""".r
-  private val LakeChangesViewRe =
-    ("""(?is)CREATE\s+LAKE\s+CHANGES\s+VIEW\s+(\w+)\s+FROM\s+'([^']+)'""" +
-      """\s+BETWEEN\s+(\d+)\s+AND\s+(\d+)\s*;?""").r
-  private val WhenMatchedDeleteRe =
-    """(?is)WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*;?""".r
-  private val WhenMatchedUpdateAllRe =
-    """(?is)WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+\*\s*;?""".r
-  private val WhenMatchedUpdateRe =
-    """(?is)WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+?)\s*;?""".r
-  private val WhenNotMatchedRe =
-    """(?is)WHEN\s+NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT(?:\s+\*)?\s*;?""".r
-  private val CreateRefRe =
-    ("""(?is)CREATE\s+(BRANCH|TAG)\s+([\w.-]+)\s+FROM\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?""").r
-  private val DropRefRe =
-    """(?is)DROP\s+(BRANCH|TAG)\s+([\w.-]+)\s+FROM\s+LAKE\s+'([^']+)'\s*;?""".r
-  private val ShowRefsRe = """(?is)SHOW\s+REFS\s+FROM\s+LAKE\s+'([^']+)'\s*;?""".r
-  // reference statement-name parity (SqlShowBranches / SqlShowTags):
-  // filtered forms of SHOW REFS
-  private val ShowRefsKindRe =
-    """(?is)SHOW\s+(BRANCHES|TAGS)\s+FROM\s+LAKE\s+'([^']+)'\s*;?""".r
-  // ALTER BRANCH|TAG ... ASSIGN (SqlAssignBranch/SqlAssignTag — Nessie
-  // assign): repoint a ref; a branch's staged commits are discarded
-  private val AssignRefRe =
-    ("""(?is)ALTER\s+(BRANCH|TAG)\s+([\w.-]+)\s+ASSIGN\s+VERSION\s+(\d+)""" +
-      """\s+IN\s+LAKE\s+'([^']+)'\s*;?""").r
-  private val AlterUserRe =
-    """(?is)ALTER\s+USER\s+([\w.-]+)\s+SET\s+PASSWORD\s+'([^']*)'\s*;?""".r
-  // row-access + column-masking policies (reference alter.ftl:92,162 —
-  // SqlAlterTableAddRowAccessPolicy / SqlAlterTableSetColumnMasking;
-  // policy = UDF name + argument columns, parser/SqlPolicy.java)
-  private val DatasetKw = """(?:TABLE|VIEW|VDS|PDS|DATASET)"""
-  private val AddRowPolicyRe =
-    (s"""(?is)ALTER\\s+$DatasetKw\\s+([\\w.]+)\\s+ADD\\s+ROW\\s+ACCESS\\s+""" +
-      """POLICY\s+(\w+)\s*\(\s*([^)]*)\s*\)\s*;?""").r
-  private val DropRowPolicyRe =
-    (s"""(?is)ALTER\\s+$DatasetKw\\s+([\\w.]+)\\s+DROP\\s+ROW\\s+ACCESS\\s+""" +
-      """POLICY\s+(\w+)\s*(?:\(\s*[^)]*\s*\))?\s*;?""").r
-  private val SetMaskingRe =
-    (s"""(?is)ALTER\\s+$DatasetKw\\s+([\\w.]+)\\s+(?:MODIFY|CHANGE|ALTER)\\s+""" +
-      """(?:COLUMN\s+)?(\w+)\s+SET\s+MASKING\s+POLICY\s+(\w+)\s*\(\s*([^)]*)\s*\)\s*;?""").r
-  private val UnsetMaskingRe =
-    (s"""(?is)ALTER\\s+$DatasetKw\\s+([\\w.]+)\\s+(?:MODIFY|CHANGE|ALTER)\\s+""" +
-      """(?:COLUMN\s+)?(\w+)\s+UNSET\s+MASKING\s+POLICY\s+(\w+)\s*(?:\(\s*\))?\s*;?""").r
-  private val ShowPoliciesRe = """(?is)SHOW\s+POLICIES\s*;?""".r
-  private val MergeBranchRe =
-    """(?is)MERGE\s+BRANCH\s+([\w.-]+)\s+INTO\s+LAKE\s+'([^']+)'(\s+DRY\s+RUN)?\s*;?""".r
-  private val InsertLakeAtBranchRe =
-    """(?is)INSERT\s+INTO\s+LAKE\s+'([^']+)'\s+AT\s+BRANCH\s+([\w.-]+)\s+(.+?)\s*;?""".r
-  private val DeleteLakeAtBranchRe =
-    ("""(?is)DELETE\s+FROM\s+LAKE\s+'([^']+)'\s+AT\s+BRANCH\s+([\w.-]+)""" +
-      """\s+WHERE\s+(.+?)\s*;?""").r
-  private val UpdateLakeAtBranchRe =
-    ("""(?is)UPDATE\s+LAKE\s+'([^']+)'\s+AT\s+BRANCH\s+([\w.-]+)""" +
-      """\s+SET\s+(.+?)\s*;?""").r
-  private val CreateLakeViewAtRe =
-    ("""(?is)CREATE\s+LAKE\s+VIEW\s+(\w+)\s+FROM\s+'([^']+)'""" +
-      """\s+AT\s+(?:BRANCH|TAG)\s+([\w.-]+)\s*;?""").r
-  private val RenameLakeColRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*;?""".r
-  private val AddLakeColRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+ADD\s+COLUMN\s+(\w+)\s+([\w()<>,\s]+?)\s*;?""".r
-  // rename+retype in one statement (reference SqlAlterTableChangeColumn:
-  // ALTER TABLE t CHANGE [COLUMN] old newName newType)
-  private val ChangeLakeColRe =
-    ("""(?is)ALTER\s+LAKE\s+'([^']+)'\s+(?:CHANGE|MODIFY)\s+(?:COLUMN\s+)?""" +
-      """(\w+)\s+(\w+)\s+([\w()<>,\s]+?)\s*;?""").r
-  private val DropLakeColRe =
-    """(?is)ALTER\s+LAKE\s+'([^']+)'\s+DROP\s+COLUMN\s+(\w+)\s*;?""".r
-  private val RollbackLakeRe =
-    """(?is)ROLLBACK\s+LAKE\s+'([^']+)'\s+TO\s+VERSION\s+(\d+)\s*;?""".r
-  private val AnalyzeLakeRe =
-    ("""(?is)ANALYZE\s+LAKE\s+'([^']+)'""" +
-      """(?:\s+FOR\s+COLUMNS\s*\(([^)]*)\))?""" +
-      """(\s+COMPUTE\s+STATISTICS(\s+WITH\s+HISTOGRAM(\s+(\d+)\s+BUCKETS)?)?)?\s*;?""").r
-  private val CopyIntoRe =
-    ("""(?is)COPY\s+INTO\s+'([^']+)'\s+FROM\s+'([^']+)'\s+FORMAT\s+(\w+)\s+""" +
-      """SCHEMA\s+'([^']+)'(?:\s+ON_ERROR\s+(\w+))?\s*;?""").r
-
-  /** Scan `s` outside quotes/parens, handling backslash escapes inside
-    * string literals, invoking `f(i, ch)` at each top-level position. */
-  /** Indices of `s` at paren depth 0 outside string literals. */
-  private def topLevelIndices(s: String): Set[Int] = {
-    val b = Set.newBuilder[Int]
-    scanTopLevel(s) { (i, _) => b += i }
-    b.result()
-  }
-
-  private[sqlext] val QualifyKw = """(?i)\bQUALIFY\b""".r
-  private[sqlext] val TrailerKw = """(?i)\b(ORDER\s+BY|LIMIT)\b""".r
-  private[sqlext] val FromKw = """(?i)\bFROM\b""".r
-
-  /** Top-level (depth-0, unquoted) matches of `re` in `s` as (start, end). */
-  private[sqlext] def topLevelMatches(
-      s: String, re: scala.util.matching.Regex): Seq[(Int, Int)] = {
-    val ms = re.findAllMatchIn(s).toSeq
-    if (ms.isEmpty) Nil // fast path: no depth scan for keyword-free text
-    else {
-      val top = topLevelIndices(s)
-      ms.filter(m => top.contains(m.start)).map(m => (m.start, m.end))
-    }
-  }
-
-  private def scanTopLevel(s: String)(f: (Int, Char) => Unit): Unit = {
-    var depth = 0; var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inQuote) {
-        if (ch == '\\') i += 1 // skip escaped char inside a literal
-        else if (ch == '\'') inQuote = false
-      } else ch match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case c if depth == 0 => f(i, c)
-        case _ =>
-      }
-      i += 1
-    }
-  }
-
-  /** Split on commas at paren/quote depth 0 (SET lists whose values contain
-    * function calls: `SET a = f(x, y), b = 2`) with escape-aware literals. */
-  private[sqlext] def splitTopLevel(s: String): Seq[String] = {
-    val cuts = Seq.newBuilder[Int]
-    scanTopLevel(s) { (i, c) => if (c == ',') cuts += i }
-    val idxs = cuts.result()
-    val parts = (-1 +: idxs :+ s.length).sliding(2).map {
-      case Seq(a, b) => s.substring(a + 1, b)
-    }.toSeq
-    parts.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Index of the first top-level (outside quotes/parens) occurrence of the
-    * keyword, or -1 — so `SET note = 'fix where broken' WHERE id = 1`
-    * splits at the real WHERE, not the one inside the string. */
-  private[sqlext] def topLevelKeyword(s: String, kw: String): Int = {
-    var found = -1
-    scanTopLevel(s) { (i, _) =>
-      if (found < 0 && i + kw.length <= s.length &&
-        s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-        (i + kw.length == s.length || !Character.isLetterOrDigit(s.charAt(i + kw.length))))
-        found = i
-    }
-    found
-  }
-
-  /** Split `(<query>) <clauses>` at the close paren matching the leading
-    * one (quote-aware — parens inside string literals don't count). */
-  private[sqlext] def splitParenQuery(rest: String): (String, String) = {
-    val s = rest.trim
-    require(s.startsWith("("),
-      s"MERGE ... ON ... USING requires a parenthesized source query: $s")
-    var depth = 0; var inQuote = false; var close = -1
-    var i = 0
-    while (i < s.length && close < 0) {
-      val ch = s.charAt(i)
-      if (inQuote) {
-        if (ch == '\\') i += 1
-        else if (ch == '\'') inQuote = false
-      } else ch match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
-    require(close > 0, s"unbalanced parentheses in MERGE source query: $s")
-    (s.substring(1, close).trim, s.substring(close + 1).trim)
-  }
-
-  /** Parse the WHEN-clause list of an ANSI MERGE. Clause boundaries are
-    * top-level `WHEN [NOT] MATCHED` keywords (a CASE WHEN inside a clause
-    * condition sits behind parens or lacks the MATCHED keyword, so it
-    * never splits). */
-  private[sqlext] def parseMergeClauses(text: String)
-      : (Seq[graft.sources.SnapshotTable.WhenMatched],
-         Option[graft.sources.SnapshotTable.WhenNotMatched]) = {
-    import graft.sources.SnapshotTable.{MatchedAction, WhenMatched, WhenNotMatched}
-    val starts = scala.collection.mutable.ArrayBuffer[Int]()
-    scanTopLevel(text) { (i, _) =>
-      if (text.regionMatches(true, i, "WHEN", 0, 4) &&
-        (i == 0 || Character.isWhitespace(text.charAt(i - 1))) &&
-        text.substring(i + 4).matches("(?is)\\s+(NOT\\s+)?MATCHED\\b.*"))
-        starts += i
-    }
-    require(starts.nonEmpty, s"MERGE requires at least one WHEN clause: $text")
-    require(text.take(starts.head).trim.isEmpty,
-      s"unexpected text before first WHEN clause: ${text.take(starts.head)}")
-    val segs = (starts.toSeq :+ text.length).sliding(2).map {
-      case Seq(a, b) => text.substring(a, b).trim
-    }.toSeq
-    val matched = Seq.newBuilder[WhenMatched]
-    var notMatched: Option[WhenNotMatched] = None
-    segs.foreach {
-      case WhenMatchedDeleteRe(cond) =>
-        matched += WhenMatched(Option(cond).map(_.trim), MatchedAction.Delete)
-      case WhenMatchedUpdateAllRe(cond) =>
-        matched += WhenMatched(Option(cond).map(_.trim), MatchedAction.UpdateAll)
-      case WhenMatchedUpdateRe(cond, sets) =>
-        val assignments = splitTopLevel(sets).map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"malformed SET assignment in MERGE: $a")
-          a.take(eq).trim -> a.drop(eq + 1).trim
-        }
-        matched += WhenMatched(Option(cond).map(_.trim),
-          MatchedAction.Update(assignments))
-      case WhenNotMatchedRe(cond) =>
-        require(notMatched.isEmpty, "MERGE allows one WHEN NOT MATCHED clause")
-        notMatched = Some(WhenNotMatched(Option(cond).map(_.trim)))
-      case other =>
-        throw new IllegalArgumentException(s"unrecognized MERGE clause: $other")
-    }
-    (matched.result(), notMatched)
-  }
-
-  private def out(names: String*): Seq[Attribute] =
+  private[sqlext] def out(names: String*): Seq[Attribute] =
     names.map(n => AttributeReference(n, StringType, nullable = true)())
 
   case class CreateReflectionCommand(name: String, path: String, query: String)
@@ -1587,29 +399,6 @@ object GraftSqlParser {
       s"$what only accepts a QUERY body — commands/DML would execute")
     org.apache.spark.sql.graft.Bridge.ofRows(spark, parsed)
   }
-
-  /** One builder for BOTH refresh spellings (REFRESH DATASET and
-    * ALTER ... REFRESH METADATA share the clause tail — option parsing
-    * must not diverge between them). Raw capture groups in, command out. */
-  private def refreshDatasetCommand(qpath: String, bare: String,
-      filesList: String, partList: String, regex: String, promo: String,
-      forceKw: String, missingKw: String, errConc: String): RefreshDatasetCommand =
-    RefreshDatasetCommand(Option(qpath).getOrElse(bare),
-      filesList = Option(filesList).map(fl =>
-        PropKeyRe.findAllMatchIn(fl).map(_.group(1)).toSeq),
-      partSpecs = Option(partList).map(pl =>
-        PartSpecPairRe.findAllMatchIn(pl).map(m => m.group(1) -> m.group(2)).toSeq),
-      regex = Option(regex),
-      promo = Option(promo).map(_.equalsIgnoreCase("AUTO")),
-      force = Option(forceKw).map(_.equalsIgnoreCase("FORCE")),
-      deleteWhenMissing = Option(missingKw).map(_.equalsIgnoreCase("DELETE")),
-      errorOnConcurrent = errConc != null,
-      out("dataset", "format", "files_total", "files_added",
-        "files_removed", "status"))
-
-  /** Comma-split a privilege list (`USAGE, COMMIT`). */
-  private def splitPrivs(privs: String): Seq[String] =
-    privs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** GRANT/REVOKE ... ON BRANCH|TAG ref IN CATALOG '<dir>'
     * (SqlGrantOnReference): a privilege scoped to ONE ref of a lake
@@ -2003,15 +792,13 @@ object GraftSqlParser {
   case class AlterEngineCommand(name: String, body: String,
       override val output: Seq[Attribute]) extends LeafRunnableCommand {
     override def run(spark: SparkSession): Seq[Row] = {
-      val assign = """(?is)\s*(MIN_REPLICAS|MAX_REPLICAS)\s*=\s*(\d+)\s*""".r
-      val parts =
-        if (body.trim.isEmpty) Seq.empty
-        else body.split(",", -1).toSeq.map {
-          case assign(k, v) => k.toUpperCase(java.util.Locale.ROOT) -> v.toInt
-          case other => throw new IllegalArgumentException(
-            s"ALTER ENGINE: cannot parse '${other.trim}' " +
-              "(expected MIN_REPLICAS = <n> and/or MAX_REPLICAS = <n>)")
+      val parts = if (body.trim.isEmpty) Nil else SqlGrammar.parseAll(body,
+          "ALTER ENGINE SET (MIN_REPLICAS = <n> and/or MAX_REPLICAS = <n>)") { c =>
+        c.commaList {
+          val k = c.oneOf("MIN_REPLICAS", "MAX_REPLICAS").toUpperCase(java.util.Locale.ROOT)
+          c.expectSym('='); k -> c.number().toInt
         }
+      }
       require(parts.map(_._1).distinct.size == parts.size,
         "ALTER ENGINE: duplicate replica bound")
       val kv = parts.toMap
@@ -2681,8 +1468,10 @@ object GraftSqlParser {
       extends LeafRunnableCommand {
     override def run(spark: SparkSession): Seq[Row] = {
       graft.auth.Privileges.requireAction(spark, "alter", dir, "OPTIMIZE LAKE")
-      val kv = """(\w+)\s*=\s*(\d+)""".r.findAllMatchIn(optsText)
-        .map(m => m.group(1).toLowerCase -> m.group(2).toLong).toMap
+      val kv = (if (optsText.trim.isEmpty) Nil else SqlGrammar.parseAll(optsText,
+          "OPTIMIZE ... REWRITE DATA (<option> = <n>, ...)") { c =>
+        c.commaList { val k = c.word().toLowerCase; c.expectSym('='); k -> c.number() }
+      }).toMap
       val unknown = kv.keySet -- Set("min_input_files", "target_file_size_mb",
         "min_file_size_mb", "max_file_size_mb")
       require(unknown.isEmpty, s"OPTIMIZE: unknown options $unknown " +
@@ -2925,12 +1714,9 @@ object GraftSqlParser {
       atBranch: Option[String] = None) extends LeafRunnableCommand {
     override val output: Seq[Attribute] = out("version")
     override def run(spark: SparkSession): Seq[Row] = {
-      val sets = splitTopLevel(setsSql).map { assignment =>
-        val eq = assignment.indexOf('=')
-        require(eq > 0, s"malformed SET assignment: $assignment")
-        assignment.take(eq).trim ->
-          org.apache.spark.sql.functions.expr(assignment.drop(eq + 1).trim)
-      }.toMap
+      val sets = SqlGrammar.parseAll(setsSql, "UPDATE LAKE ... SET <col> = <expr>, ...")(
+        SqlGrammar.assignments(_))
+        .map { case (c, e) => c -> org.apache.spark.sql.functions.expr(e) }.toMap
       val t = graft.sources.SnapshotTable.forPath(spark, dir)
       val cond = org.apache.spark.sql.functions.expr(condSql)
       val v = atBranch.orElse(dmlBranchPin(spark, dir, "UPDATE LAKE")) match {
@@ -3054,9 +1840,6 @@ object GraftSqlParser {
       Seq(Row(name.toLowerCase))
     }
   }
-
-  private def splitArgs(s: String): Seq[String] =
-    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** Row-access / column-masking policy DDL (SqlAlterTableAddRowAccessPolicy,
     * SqlAlterTableSetColumnMasking and their drop/unset forms). */

@@ -1262,4 +1262,25 @@ class SqlExtSpec extends AnyFunSuite {
       spark.conf.unset(Privileges.UserConf)
     }
   }
+
+  test("comments around graft statements parse like the bare statement") {
+    val parser = spark.sessionState.sqlParser
+    def command(sql: String) = {
+      val p = parser.parsePlan(sql)
+      (p.getClass, p.productIterator.filterNot(_ == p.output).toList)
+    }
+    val dir = Files.createTempDirectory("graft_comments").toString + "/t"
+    val ctas = s"CREATE LAKE '$dir' PARTITION BY (day(ts)) STATS (id) AS SELECT 1 AS id"
+    Seq(
+      "-- leading line comment\nSHOW REFLECTIONS" -> "SHOW REFLECTIONS",
+      "/* leading block comment */ SHOW REFLECTIONS" -> "SHOW REFLECTIONS",
+      "/* leading block comment */ SHOW QUEUES" -> "SHOW QUEUES",
+      "SHOW REFLECTIONS; -- done" -> "SHOW REFLECTIONS",
+      (s"CREATE LAKE '$dir' PARTITION BY (day(ts)) /* between clauses */ STATS (id)" +
+        " -- before the query\nAS SELECT 1 AS id") -> ctas
+    ).foreach { case (commented, bare) =>
+      val got = command(commented)
+      assert(got._1.getName.startsWith("graft.") && got == command(bare), commented)
+    }
+  }
 }
