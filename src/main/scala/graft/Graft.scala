@@ -117,12 +117,15 @@ object Graft {
   }
 
   /** Does the statement parse into the graft extension grammar (whose
-    * commands Spark's analyzer-side parameter binding never sees)? */
+    * commands Spark's analyzer-side parameter binding never sees)? A
+    * bare `` TABLE parquet.`<path>` `` parses to the file metadata cache's
+    * marker, which is Spark SQL. */
   private def isGraftGrammar(spark: SparkSession, query: String): Boolean = {
     import scala.util.control.NonFatal
-    try spark.sessionState.sqlParser.parsePlan(query)
-      .getClass.getName.startsWith("graft.")
-    catch { case NonFatal(_) => false }
+    try spark.sessionState.sqlParser.parsePlan(query) match {
+      case _: graft.sources.FileMetadata.PathTable => false
+      case p => p.getClass.getName.startsWith("graft.")
+    } catch { case NonFatal(_) => false }
   }
 
   /** `?` markers outside literals, quoted identifiers and comments

@@ -49,6 +49,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult, Logi
   *    hit requires all pins to still be the table's latest (same
   *    `Reflections.versionsCurrent` rule as reflections/result cache) —
   *    this is the reference's per-dataset invalidation;
+  *  - '''file listing pins''': a path-qualified file table
+  *    (`` parquet.`/dir` ``) freezes its file listing into the plan, so
+  *    entries record the listing digest of every relation the file
+  *    metadata cache resolved ([[graft.sources.FileMetadata.pins]]) and a
+  *    hit re-lists those paths: an added, deleted or rewritten file (or a
+  *    session whose `spark.sql.*` confs would resolve the path
+  *    differently) is a miss;
   *  - '''temp-view identity''': `createOrReplaceTempView` through the
   *    DataFrame API never passes through this choke point, so entries
   *    record the raw temp-view object identity for every relation name
@@ -81,7 +88,7 @@ object PlanCache {
   private final case class Entry(
       key: String, statement: String,
       qe: org.apache.spark.sql.execution.QueryExecution, enc: AnyRef,
-      pins: Map[String, Long],
+      pins: Map[String, Long], listings: Seq[graft.sources.FileMetadata.Pin],
       tempViews: Seq[(Seq[String], Option[Int])], epochAt: Long,
       hits: AtomicLong, insertedAt: Long, lastUsed: AtomicLong)
 
@@ -209,6 +216,7 @@ object PlanCache {
           val (qe, enc) = org.apache.spark.sql.graft.Bridge.planArtifact(df)
           cache.putIfAbsent(key, Entry(key,
             text.linesIterator.mkString(" ").take(200), qe, enc, pins,
+            graft.sources.FileMetadata.pins(p),
             tempViewIds(spark, df.queryExecution.logical), epoch.get,
             new AtomicLong(0), now, new AtomicLong(now)))
           evictIfOver()
@@ -219,11 +227,13 @@ object PlanCache {
   }
 
   /** Entry still serveable: same catalog epoch, every lake pin still the
-    * table's latest, every referenced temp view still the same object. */
+    * table's latest, every referenced temp view still the same object,
+    * every pinned file listing unchanged. */
   private def fresh(spark: SparkSession, e: Entry): Boolean =
     e.epochAt == epoch.get &&
       Reflections.versionsCurrent(spark, e.pins) &&
-      e.tempViews.forall { case (parts, id) => rawViewId(spark, parts) == id }
+      e.tempViews.forall { case (parts, id) => rawViewId(spark, parts) == id } &&
+      graft.sources.FileMetadata.current(spark, e.listings)
 
   /** Marks a Literal whose value was folded from a live filesystem
     * listing at analysis time (MAXDIR/MINDIR family): the plan is

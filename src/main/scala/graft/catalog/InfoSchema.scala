@@ -276,6 +276,23 @@ object InfoSchema {
       () => graft.accel.PlanCache.listEntries
         .map(e => Row(e.fingerprint, e.statement, e.hits, e.lakeDeps)))
 
+  /** sys.file_metadata: the schema cache of path-qualified file tables
+    * (reference metadata-refresh state, `exec/store/metadatarefresh/`) —
+    * one row per (format, path, options, session conf) entry with the
+    * listing's file count, a digest of the cached schema, and how often
+    * it served a resolution (`hits`) or was inferred (`inferences`). A
+    * statement that re-inferred a schema shows as a risen `inferences`. */
+  def sysFileMetadata(spark: SparkSession): DataFrame =
+    live(spark, StructType(Seq(
+      StructField("format", StringType, nullable = false),
+      StructField("path", StringType, nullable = false),
+      StructField("files", IntegerType, nullable = false),
+      StructField("schema_digest", StringType, nullable = false),
+      StructField("hits", LongType, nullable = false),
+      StructField("inferences", LongType, nullable = false))),
+      () => graft.sources.FileMetadata.listEntries
+        .map(e => Row(e.format, e.path, e.files, e.schemaDigest, e.hits, e.inferences)))
+
   /** Object privileges (reference `sys.privileges` over the dac grant
     * store; grammar `includes/grant.ftl`). */
   def sysPrivileges(spark: SparkSession): DataFrame =
@@ -704,6 +721,7 @@ object InfoSchema {
     sysRunningQueries(spark).createOrReplaceTempView("sys_running_queries")
     sysResultCache(spark).createOrReplaceTempView("sys_result_cache")
     sysPlanCache(spark).createOrReplaceTempView("sys_plan_cache")
+    sysFileMetadata(spark).createOrReplaceTempView("sys_file_metadata")
     sysPreparedStatements(spark).createOrReplaceTempView("sys_prepared_statements")
     sysRoutingRules(spark).createOrReplaceTempView("sys_routing_rules")
     sysPrivileges(spark).createOrReplaceTempView("sys_privileges")

@@ -589,9 +589,11 @@ object GraftRestServer {
         graft.auth.Privileges.login(session, u, password.getOrElse("")))
       applyPromotions(session)
       // Graft.sql, not session.sql: a session conf `spark.graft.queue`
-      // routes REST statements through WLM admission like any other
+      // routes REST statements through WLM admission like any other.
+      // The rows come from the statement's own plan (a plan-cache hit is
+      // run, not planned again), as `df.limit(limit).toJSON` renders them.
       val df = graft.Graft.sql(session, sql)
-      val rows = df.limit(limit).toJSON.collect()
+      val rows = org.apache.spark.sql.graft.Bridge.takeJson(df, limit)
       val schema = df.schema.fields.map(f =>
         s"""{"name":${q(f.name)},"type":${q(f.dataType.simpleString)}}""")
       s"""{"rowCount":${rows.length},"schema":[${schema.mkString(",")}],""" +
@@ -723,6 +725,7 @@ object GraftRestServer {
             }
         }
       } catch {
+        case e: MalformedJson => respond(ex, 400, error(e.getMessage))
         case e: Exception => respond(ex, 500, error(e.getMessage.take(300)))
       }
   }
@@ -974,6 +977,7 @@ object GraftRestServer {
             }
         }
       } catch {
+        case e: MalformedJson => respond(ex, 400, error(e.getMessage))
         case e: Exception => respond(ex, 500, error(e.toString.take(500)))
       } finally ex.close()
   }
@@ -1047,6 +1051,7 @@ object GraftRestServer {
         }
       } catch {
         case _: NumberFormatException => respond(ex, 400, error("job id must be numeric"))
+        case e: MalformedJson => respond(ex, 400, error(e.getMessage))
         case e: Exception => respond(ex, 500, error(e.toString.take(500)))
       } finally ex.close()
 
@@ -1066,31 +1071,65 @@ object GraftRestServer {
           .decode(kv.stripPrefix(name + "="), StandardCharsets.UTF_8)
       }
 
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
+  /** A JSON string literal: quote, backslash and every control character
+    * below U+0020 escaped. */
+  private[server] def q(s: String): String = {
+    val sb = new StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => sb.append("\\\""); case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n"); case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t"); case '\b' => sb.append("\\b")
+      case '\f' => sb.append("\\f")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
 
-  /** Inverse of [[q]]'s escaping for registry reload. */
-  private def unq(s: String): String = {
+  /** A request body that is not well-formed JSON where a field is read
+    * (answered with 400). */
+  private[server] final class MalformedJson(msg: String) extends IllegalArgumentException(msg)
+
+  /** The JSON string whose body starts at `from` (just past its opening
+    * quote), decoded, and the index of its closing quote (`s.length` when
+    * the text ends first). Every JSON escape is decoded; a four-digit
+    * `u` escape yields one UTF-16 unit, so a surrogate pair decodes to its
+    * code point. */
+  private def unescape(s: String, from: Int): (String, Int) = {
     val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
+    var i = from
+    while (i < s.length && s(i) != '"') {
+      if (s(i) != '\\') { sb.append(s(i)); i += 1 }
+      else {
+        if (i + 1 >= s.length) throw new MalformedJson("malformed JSON: dangling backslash")
         s(i + 1) match {
-          case 'n' => sb.append('\n'); case 'r' => sb.append('\r')
-          case 't' => sb.append('\t'); case c => sb.append(c)
+          case '"' => sb.append('"'); case '\\' => sb.append('\\')
+          case '/' => sb.append('/'); case 'b' => sb.append('\b')
+          case 'f' => sb.append('\f'); case 'n' => sb.append('\n')
+          case 'r' => sb.append('\r'); case 't' => sb.append('\t')
+          case 'u' =>
+            val hex = s.slice(i + 2, i + 6)
+            if (hex.length < 4 || !hex.forall(Character.digit(_, 16) >= 0))
+              throw new MalformedJson(s"malformed JSON escape \\u$hex")
+            sb.append(Integer.parseInt(hex, 16).toChar)
+            i += 4
+          case c => throw new MalformedJson(s"malformed JSON escape \\$c")
         }
         i += 2
-      } else { sb.append(s(i)); i += 1 }
+      }
     }
-    sb.toString
+    (sb.toString, i)
   }
+
+  /** Inverse of [[q]]'s escaping for registry reload. */
+  private def unq(s: String): String = unescape(s, 0)._1
 
   private def error(msg: String): String = s"""{"error":${q(msg)}}"""
 
   /** Minimal JSON string/number field extraction — the request body is a
     * flat object; a full JSON parser would be the only use of one in the
-    * engine. Handles escaped quotes inside the SQL string. */
+    * engine. String values are decoded ([[unescape]]); a malformed escape
+    * or an unterminated string throws [[MalformedJson]]. */
   private[server] def jsonField(body: String, name: String): Option[String] = {
     val key = "\"" + name + "\""
     val i = body.indexOf(key)
@@ -1101,18 +1140,9 @@ object GraftRestServer {
     while (j < body.length && body(j).isWhitespace) j += 1
     if (j >= body.length) return None
     if (body(j) == '"') {
-      val sb = new StringBuilder
-      var k = j + 1
-      while (k < body.length && body(k) != '"') {
-        if (body(k) == '\\' && k + 1 < body.length) {
-          body(k + 1) match {
-            case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-            case 'r' => sb.append('\r'); case c => sb.append(c)
-          }
-          k += 2
-        } else { sb.append(body(k)); k += 1 }
-      }
-      Some(sb.toString)
+      val (value, end) = unescape(body, j + 1)
+      if (end >= body.length) throw new MalformedJson(s"malformed JSON: unterminated \"$name\" string")
+      Some(value)
     } else {
       val end = body.indexWhere(c => !(c.isDigit || c == '-' || c == '+'), j)
       Some(body.substring(j, if (end < 0) body.length else end).trim)

@@ -40,6 +40,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           graft.auth.Privileges.principalOf(SparkSession.active)
             .map(_.name).orNull, StringType)))
+    // Path-qualified file tables (parquet.`/dir` …) resolve through the
+    // file metadata cache: the parser marks them, this rule resolves the
+    // marker with the cached schema (a resolution rule: Hive sessions drop
+    // injected hint-resolution rules)
+    e.injectResolutionRule(session => new graft.sources.FileMetadata.Resolve(session))
     e.injectOptimizerRule(session => new graft.accel.Reflections.Substitute(session))
     e.injectOptimizerRule(session => new graft.plans.CountFromManifest(session))
     e.injectOptimizerRule(session => new graft.plans.CategoricalSelectivity(session))

@@ -15,8 +15,10 @@ import graft.streaming.{Pipe, Pipes}
   * `SparkSessionExtensions.injectParser`. The statements and their grammar
   * are [[SqlGrammar]]'s rule table; a statement no rule accepts goes to
   * Spark's parser untouched, after the top-level QUALIFY rewrite
-  * ([[SqlGrammar.qualifyRewrite]]). The commands the rules build live in
-  * the companion object. */
+  * ([[SqlGrammar.qualifyRewrite]]); its path-qualified file tables are
+  * then marked for the file metadata cache
+  * ([[graft.sources.FileMetadata.mark]]). The commands the rules build
+  * live in the companion object. */
 class GraftSqlParser(spark: SparkSession, delegate: ParserInterface) extends ParserInterface {
 
   import GraftSqlParser._
@@ -53,8 +55,8 @@ class GraftSqlParser(spark: SparkSession, delegate: ParserInterface) extends Par
   private def parseWith(sqlText: String,
                         fallback: String => LogicalPlan): LogicalPlan = {
     val c = new Cursor(sqlText, runScriptPlan)
-    SqlGrammar.command(c).getOrElse(
-      SqlGrammar.qualifyRewrite(c).map(parsePlan).getOrElse(fallback(sqlText)))
+    SqlGrammar.command(c).getOrElse(SqlGrammar.qualifyRewrite(c).map(parsePlan)
+      .getOrElse(graft.sources.FileMetadata.mark(fallback(sqlText))))
   }
 
   override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)

@@ -99,6 +99,42 @@ object Bridge {
       enc.asInstanceOf[org.apache.spark.sql.Encoder[org.apache.spark.sql.Row]])
   }
 
+  /** The first `n` rows of `df` as the JSON objects
+    * `df.limit(n).toJSON.collect()` returns, from one run of the
+    * statement's own physical plan: `executeTake(n)` inside one SQL
+    * execution, as `Dataset.withAction` runs an action (metrics reset
+    * first, so a re-run plan-cache hit does not add to the last run's),
+    * rendered with the generator and options `Dataset.toJSON` uses. No
+    * second Dataset is built, so a plan-cache hit is not re-analyzed,
+    * re-optimized, re-planned or re-code-generated (`Dataset`,
+    * `JacksonGenerator` and `QueryExecution.withInternalError` are
+    * `private[sql]`). A result that cannot exceed `n` rows (`LIMIT k`
+    * with k ≤ n, `ORDER BY … LIMIT k`, a global aggregate) is collected
+    * whole instead: the limit operators implement only `executeCollect`,
+    * and `executeTake` would shuffle them into one partition first. */
+  def takeJson(df: org.apache.spark.sql.DataFrame, n: Int): Array[String] = {
+    import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
+    import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      QueryExecution.withInternalError("""The "collect" action failed.""") {
+        val plan = qe.executedPlan
+        plan.resetMetrics()
+        if (qe.optimizedPlan.maxRows.exists(_ <= n)) plan.executeCollect() else plan.executeTake(n)
+      }
+    }
+    val writer = new java.io.CharArrayWriter()
+    val gen = new JacksonGenerator(ds.exprEnc.schema, writer, new JSONOptions(
+      Map.empty[String, String], ds.sparkSession.sessionState.conf.sessionLocalTimeZone))
+    try rows.map { r =>
+      writer.reset()
+      gen.write(r)
+      gen.flush()
+      writer.toString
+    } finally gen.close()
+  }
+
   /** Session Hadoop configuration (sessionState is `private[sql]`). */
   def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()

@@ -264,4 +264,20 @@ class PlanCacheSpec extends AnyFunSuite {
       assert(Graft.sql(spark, q).head().getString(0) == "gamma")
     }
   }
+
+  test("a hit over a path-qualified table re-checks its file listing") {
+    withCleanCache {
+      val dir = java.nio.file.Files.createTempDirectory("pc_path").toString + "/t"
+      spark.range(10).coalesce(1).write.parquet(dir)
+      val q = s"SELECT count(*) FROM parquet.`$dir`"
+      val a = Graft.sql(spark, q)
+      assert(a.head().getLong(0) == 10L)
+      assert(sameQe(Graft.sql(spark, q), a), "an unchanged listing still hits")
+      spark.range(5).coalesce(1).write.mode("append").parquet(dir)
+      assert(spark.sql(q).head().getLong(0) == 15L)
+      val b = Graft.sql(spark, q)
+      assert(!sameQe(b, a), "an appended file makes the cached plan stale")
+      assert(b.head().getLong(0) == 15L, "the replanned statement reads the new file")
+    }
+  }
 }
