@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, ExprId, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
@@ -126,6 +126,18 @@ object QueryHistory {
     case other => other +: other.children.flatMap(finalPlans)
   }
 
+  /** The rows the plan's root produced: `numOutputRows` of the first node
+    * that has the metric, descending only through nodes that keep the row
+    * count (a root that whole-stage codegen compiled is a
+    * `WholeStageCodegenExec`, which has no such metric); -1 otherwise. */
+  private def outputRows(p: SparkPlan): Long =
+    p.metrics.get("numOutputRows").map(_.value).getOrElse(p match {
+      case w: WholeStageCodegenExec => outputRows(w.child)
+      case i: InputAdapter => outputRows(i.child)
+      case pr: ProjectExec => outputRows(pr.child)
+      case _ => -1L
+    })
+
   private def principal(qe: QueryExecution): String =
     try graft.auth.Privileges.principalOf(qe.sparkSession).map(_.name).getOrElse("")
     catch { case _: Throwable => "" }
@@ -134,8 +146,7 @@ object QueryHistory {
                    durationNs: Long, err: Option[Exception]): Unit = {
     val rec = try {
       val plans = finalPlans(qe.executedPlan)
-      val rows = plans.headOption
-        .flatMap(_.metrics.get("numOutputRows").map(_.value)).getOrElse(-1L)
+      val rows = plans.headOption.map(outputRows).getOrElse(-1L)
       val shuffled = plans.flatMap(_.metrics.get("shuffleBytesWritten").map(_.value)).sum
       QueryRecord(ids.incrementAndGet(), action,
         if (err.isEmpty) "SUCCESS" else "FAILURE",

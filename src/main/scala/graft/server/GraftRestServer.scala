@@ -552,10 +552,13 @@ object GraftRestServer {
 
   /** Register every promoted dataset as a temp view on `session` (a
     * broken promotion — folder since deleted — must not take down
-    * unrelated statements: it is skipped and surfaces when queried). */
-  private def applyPromotions(session: SparkSession): Unit =
+    * unrelated statements: it is skipped and surfaces when queried). The
+    * registration runs no command, so it adds no history row to the
+    * request's statement. */
+  private[server] def applyPromotions(session: SparkSession): Unit =
     promotions.forEach { (name, pf) =>
-      try promotedDf(session, name, pf._1, pf._2).createOrReplaceTempView(name)
+      try org.apache.spark.sql.graft.Bridge.replaceTempView(
+        promotedDf(session, name, pf._1, pf._2), name)
       catch { case _: Exception => () }
     }
 
@@ -569,29 +572,27 @@ object GraftRestServer {
           val limit = jsonField(body, "limit").map(_.toInt).getOrElse(500)
           val user = jsonField(body, "user")
           val password = jsonField(body, "password")
+          // REST is stateless (a fresh session per request), so the
+          // principal binds via optional body credentials rather than an
+          // AUTHENTICATE statement on a long-lived connection
           if (sql.isEmpty) respond(ex, 400, error("missing \"sql\" field"))
-          else respond(ex, 200,
-            run(sql, math.min(math.max(limit, 1), 10000), user, password))
+          else Statements.open(root, Statements.Credentials(None, user, password),
+              required = false) match {
+            case Left(reason) => respond(ex, 400, error(reason))
+            case Right(o) =>
+              respond(ex, 200, run(o.session, sql, math.min(math.max(limit, 1), 10000)))
+          }
         }
       } catch {
         case e: Exception => respond(ex, 400, error(e.toString.take(500)))
       } finally ex.close()
 
-    private def run(sql: String, limit: Int,
-                    user: Option[String], password: Option[String]): String = {
-      val session = root.newSession()
-      // REST is stateless (a fresh cloned session per request), so the
-      // principal binds via optional body credentials rather than an
-      // AUTHENTICATE statement on a long-lived connection; while auth
-      // enforcement is on, credential-less requests run anonymous and the
-      // check rule refuses guarded reads.
-      user.foreach(u =>
-        graft.auth.Privileges.login(session, u, password.getOrElse("")))
-      applyPromotions(session)
+    /** The statement's first `limit` rows, from its own plan (a plan-cache
+      * hit is run, not planned again), as `df.limit(limit).toJSON` renders
+      * them. */
+    private def run(session: SparkSession, sql: String, limit: Int): String = {
       // Graft.sql, not session.sql: a session conf `spark.graft.queue`
-      // routes REST statements through WLM admission like any other.
-      // The rows come from the statement's own plan (a plan-cache hit is
-      // run, not planned again), as `df.limit(limit).toJSON` renders them.
+      // routes REST statements through WLM admission like any other
       val df = graft.Graft.sql(session, sql)
       val rows = org.apache.spark.sql.graft.Bridge.takeJson(df, limit)
       val schema = df.schema.fields.map(f =>
@@ -617,23 +618,14 @@ object GraftRestServer {
     * and source handlers): Right(None) while enforcement is off; 401
     * Lefts for absent/malformed/invalid credentials while on. */
   private def basicPrincipal(root: SparkSession, ex: HttpExchange)
-      : Either[(Int, String), Option[graft.auth.Privileges.User]] = {
-    val p = graft.auth.Privileges
-    if (!p.enforcing) Right(None)
+      : Either[(Int, String), Option[graft.auth.Privileges.User]] =
+    if (!graft.auth.Privileges.enforcing) Right(None)
     else Option(ex.getRequestHeaders.getFirst("Authorization")) match {
-      case None => Left(401 ->
-        "this endpoint requires Authorization: Basic while auth enforcement is on")
-      case Some(h) =>
-        try {
-          val s = root.newSession()
-          p.loginBasic(s, h).map(_ => p.principalOf(s)) match {
-            case None => Left(401 -> "unsupported authorization scheme (Basic only)")
-            case Some(Some(u)) => Right(Some(u))
-            case Some(None) => Left(401 -> "invalid basic credentials")
-          }
-        } catch { case e: Exception => Left(401 -> e.getMessage.take(300)) }
+      case Some(h) if !Statements.isBasic(h) =>
+        Left(401 -> "unsupported authorization scheme (Basic only)")
+      case h => Statements.open(root, Statements.Credentials(h), required = true)
+        .map(_.principal).left.map(401 -> _)
     }
-  }
 
   /** `/source` — the reference's source-management REST surface
     * (`dac/.../SourceResource.java`: GET/PUT/DELETE per source; state in
@@ -1002,17 +994,9 @@ object GraftRestServer {
               StandardCharsets.UTF_8)
             val caller: Either[(Int, String), SparkSession] =
               if (!graft.auth.Privileges.enforcing) Right(spark)
-              else jsonField(body, "user") match {
-                case None => Left(401 ->
-                  "cancel requires credentials while auth enforcement is on")
-                case Some(u) =>
-                  try {
-                    val s = spark.newSession()
-                    graft.auth.Privileges.login(s, u,
-                      jsonField(body, "password").getOrElse(""))
-                    Right(s)
-                  } catch { case e: Exception => Left(401 -> e.getMessage.take(300)) }
-              }
+              else Statements.open(spark, Statements.Credentials(None,
+                  jsonField(body, "user"), jsonField(body, "password")), required = true)
+                .map(_.session).left.map(401 -> _)
             caller.flatMap(s => graft.engine.RunningQueries.cancel(s, id.toLong)
                 .left.map(403 -> _)) match {
               case Left((code, msg)) => respond(ex, code, error(msg))

@@ -28,20 +28,24 @@ import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
   *    ([[Pb]]);
   *  - data plane: real Arrow IPC — the schema/batch flatbuffer metadata
   *    and buffer bodies come from arrow-vector's MessageSerializer and
-  *    Spark's own columnar result path (Bridge.arrowBatches), split into
+  *    Spark's own columnar result path (Bridge.runArrow), split into
   *    FlightData {data_header, data_body} frames exactly as
   *    arrow-java's flight-core frames them.
   *
-  * Auth mirrors the reference Flight endpoint: `authorization: Basic`
-  * headers are verified against [[graft.auth.Privileges]] and exchanged
-  * for a bearer token (the `authenticate_basic_token` flow); while
-  * enforcement is ON, statements require a valid principal and run with
-  * it bound, so row policies/masking/grants all apply on this wire too.
+  * Statements take the shared path of [[graft.server.Statements]]: the
+  * request session comes from its opener, which verifies
+  * `authorization: Basic` headers against [[graft.auth.Privileges]] and
+  * exchanges them for a bearer token (the `authenticate_basic_token`
+  * flow); while enforcement is ON, statements require a valid principal
+  * and run with it bound, so row policies/masking/grants all apply on
+  * this wire too. A DoGet runs its statement once inside one SQL
+  * execution, so `CANCEL QUERY`, the ledger and the query history see it
+  * as they see any other statement.
   *
   * Scale: a thin protocol adapter like the other three front ends —
-  * plans execute on the cluster; the result streams batch-by-batch off
-  * `toLocalIterator` (one partition in driver memory at a time), never a
-  * collected row array.
+  * plans execute on the cluster; the result streams batch-by-batch, one
+  * partition's batches in driver memory at a time, never a collected row
+  * array.
   */
 object GraftFlightServer {
 
@@ -69,43 +73,28 @@ object GraftFlightServer {
     grpc.Metadata.Key.of("authorization", grpc.Metadata.ASCII_STRING_MARSHALLER)
   /** Request's authorization header, carried into handlers. */
   private val CtxAuth: grpc.Context.Key[String] = grpc.Context.key("graft-flight-auth")
+  /** The bearer token a Handshake's Basic header was exchanged for. */
+  private val CtxBearer: grpc.Context.Key[Option[String]] =
+    grpc.Context.keyWithDefault("graft-flight-bearer", None)
 
   // ---- auth -------------------------------------------------------------
 
   private def unauthenticated(msg: String): grpc.StatusRuntimeException =
     grpc.Status.UNAUTHENTICATED.withDescription(msg).asRuntimeException()
 
-  /** Validate Basic credentials and mint a bearer token (global token
-    * table), or None when the header is not Basic / invalid. */
-  private def mintBearer(root: SparkSession, header: String): Option[String] =
-    try graft.auth.Privileges.loginBasic(root.newSession(), header)
-    catch { case _: SecurityException | _: IllegalArgumentException => None }
+  /** The request session from the shared opener, the call's authorization
+    * header bound. UNAUTHENTICATED for a present-but-invalid header, or
+    * for a missing one while enforcement is on. */
+  private def session(root: SparkSession): SparkSession =
+    graft.server.Statements.open(root,
+      graft.server.Statements.Credentials(Option(CtxAuth.get())), required = true)
+      .fold(reason => throw unauthenticated(s"flight: $reason"), _.session)
 
-  /** Bind the caller's principal (Basic or Bearer header) onto `session`.
-    * Throws UNAUTHENTICATED for a present-but-invalid header, or for a
-    * missing one while enforcement is on. */
-  private def bindPrincipal(root: SparkSession, session: SparkSession): Unit = {
-    val header = CtxAuth.get()
-    val p = graft.auth.Privileges
-    header match {
-      case null | "" =>
-        if (p.enforcing)
-          throw unauthenticated("flight: statement requires credentials " +
-            "(authorization: Basic or Bearer) while auth enforcement is on")
-      case h if h.regionMatches(true, 0, "Basic ", 0, 6) =>
-        mintBearer(root, h) match {
-          case Some(tok) => session.conf.set(p.TokenConf, tok)
-          case None => throw unauthenticated("flight: invalid basic credentials")
-        }
-        if (p.principalOf(session).isEmpty)
-          throw unauthenticated("flight: invalid basic credentials")
-      case h if h.regionMatches(true, 0, "Bearer ", 0, 7) =>
-        session.conf.set(p.TokenConf, h.substring(7).trim)
-        if (p.principalOf(session).isEmpty)
-          throw unauthenticated("flight: unknown or expired bearer token")
-      case _ => throw unauthenticated("flight: unsupported authorization scheme")
-    }
-  }
+  /** Refuse unless `session`'s principal is `owner`: prepared handles and
+    * statement tickets belong to the principal they were issued to. */
+  private def requireOwner(session: SparkSession, owner: Option[String], what: String): Unit =
+    if (owner != graft.auth.Privileges.principalOf(session).map(_.name))
+      throw unauthenticated(s"$what belongs to a different principal")
 
   // ---- Arrow IPC framing --------------------------------------------------
 
@@ -149,7 +138,7 @@ object GraftFlightServer {
     bb.array()
   }
 
-  /** Split one encapsulated IPC message (what Bridge.arrowBatches emits)
+  /** Split one encapsulated IPC message (what Bridge.runArrow emits)
     * into (metadata flatbuffer, body) — the FlightData frame pair. */
   private[flight] def splitIpcMessage(msg: Array[Byte]): (Array[Byte], Array[Byte]) = {
     def le32(off: Int): Int =
@@ -165,12 +154,6 @@ object GraftFlightServer {
   }
 
   // ---- statement handling -------------------------------------------------
-
-  private def statementOf(root: SparkSession, sql: String): DataFrame = {
-    val session = root.newSession()
-    bindPrincipal(root, session)
-    graft.Graft.sql(session, sql)
-  }
 
   /** GetFlightInfo plans (and, for eager commands, executes) the
     * statement ONCE; the ticket names the planned result so DoGet
@@ -192,39 +175,18 @@ object GraftFlightServer {
         .foreach { case (k, _) => pending.remove(k) }
   }
 
+  /** Frames a stream's producer thread may queue ahead of the client. */
+  private val HandoffFrames = 8
+
   /** Stream `df` to the client as Arrow FlightData frames (schema frame
-    * first, then each IPC batch split into {data_header, data_body}).
-    *
-    * Flow control is the non-blocking gRPC idiom: frames are pushed only
-    * while the transport reports ready, and `setOnReadyHandler` re-enters
-    * the drain when a slow client's window reopens — no executor thread is
-    * pinned per slow consumer (the r9 busy-wait is gone). gRPC serializes
-    * the initial call thread and onReady callbacks per call, so the frame
-    * iterator needs no locking.
-    *
-    * The RDD stream path bypasses Dataset actions, so the
-    * QueryExecutionListener never fires — the wire-first jobs service is
-    * fed explicitly, EXCEPT for eager commands, which already executed
-    * (and were listener-recorded) at submission: recording again here
-    * would double-count the statement in sys_queries. */
+    * first, then each IPC batch split into {data_header, data_body}),
+    * from one run of the statement inside one SQL execution named
+    * `action` — the ledger attributes and cancels its jobs, and the
+    * query history records it. */
   private def streamResult(df: DataFrame, action: String,
-                           obs: StreamObserver[Array[Byte]]): Unit = {
-    val schema = org.apache.spark.sql.graft.Bridge.arrowSchema(df)
-    val t0 = System.nanoTime()
-    val frames: Iterator[Array[Byte]] =
-      Iterator.single(Pb.writeFlightData(schemaHeaderBytes(schema),
-        Array.emptyByteArray)) ++
-        org.apache.spark.sql.graft.Bridge.arrowBatches(df).map { m =>
-          val (header, body) = splitIpcMessage(m)
-          Pb.writeFlightData(header, body)
-        }
-    streamFrames(frames, obs, onDone = () => {
-      if (!df.queryExecution.logical.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.CommandResult])
-        graft.catalog.QueryHistory.record(action, df.queryExecution,
-          System.nanoTime() - t0, None)
-    })
-  }
+                           obs: StreamObserver[Array[Byte]]): Unit =
+    stream(org.apache.spark.sql.graft.Bridge.arrowSchema(df), obs)(
+      org.apache.spark.sql.graft.Bridge.runArrow(df, action))
 
   /** Stream pre-built Arrow IPC messages (schema + batches) as FlightData
     * frames — the non-DataFrame result path (GetSqlInfo's dense-union
@@ -232,41 +194,57 @@ object GraftFlightServer {
   private def streamIpc(schema: org.apache.arrow.vector.types.pojo.Schema,
                         batches: Seq[Array[Byte]],
                         obs: StreamObserver[Array[Byte]]): Unit =
-    streamFrames(
-      Iterator.single(Pb.writeFlightData(schemaHeaderBytes(schema),
-        Array.emptyByteArray)) ++
-        batches.iterator.map { m =>
-          val (header, body) = splitIpcMessage(m)
-          Pb.writeFlightData(header, body)
-        },
-      obs, onDone = () => ())
+    stream(schema, obs)(emit => batches.foreach(emit))
 
-  private def streamFrames(frames: Iterator[Array[Byte]],
-                           obs: StreamObserver[Array[Byte]],
-                           onDone: () => Unit): Unit = {
-    val sObs = obs.asInstanceOf[
+  /** The schema frame, then every IPC message `produce` emits, framed.
+    * `produce` runs on a thread of its own, the one thread an in-flight
+    * stream holds: it hands frames through a bounded queue and blocks
+    * while the queue is full. The gRPC side is the non-blocking drain:
+    * it sends while the transport reports ready and returns when the
+    * window closes or the queue is empty, and the next onReady or the
+    * next hand-off re-enters it. A counter lets only one thread run the
+    * drain at a time, so the call is never used from two threads at
+    * once, and no gRPC callback thread ever waits for the client. A
+    * client cancel interrupts the producer. */
+  private def stream(schema: org.apache.arrow.vector.types.pojo.Schema,
+                     obs: StreamObserver[Array[Byte]])
+                    (produce: (Array[Byte] => Unit) => Unit): Unit = {
+    val call = obs.asInstanceOf[
       org.sparkproject.connect.grpc.stub.ServerCallStreamObserver[Array[Byte]]]
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def finish(): Unit = if (done.compareAndSet(false, true)) {
-      onDone()
-      obs.onCompleted()
-    }
-    val drain: Runnable = () => {
-      try {
-        if (!done.get()) {
-          while (sObs.isReady && !sObs.isCancelled && frames.hasNext)
-            sObs.onNext(frames.next())
-          if (sObs.isCancelled) done.set(true)
-          else if (!frames.hasNext) finish()
-          // else: transport window closed — the onReady handler re-enters
+    val frames = new java.util.concurrent.ArrayBlockingQueue[Array[Byte]](HandoffFrames)
+    @volatile var end: Option[Option[Throwable]] = None // the producer's outcome
+    @volatile var closed = false
+    val wip = new java.util.concurrent.atomic.AtomicInteger()
+    def drain(): Unit = if (wip.getAndIncrement() == 0) {
+      var missed = 1
+      while (missed != 0) {
+        if (!closed) {
+          while (call.isReady && !frames.isEmpty) call.onNext(frames.poll())
+          if (frames.isEmpty) end.foreach { failure =>
+            closed = true
+            failure.fold(obs.onCompleted())(fail(obs, _))
+          }
         }
-      } catch {
-        case t: Throwable => if (done.compareAndSet(false, true)) fail(obs, t)
+        missed = wip.addAndGet(-missed)
       }
     }
-    sObs.setOnCancelHandler(new Runnable { def run(): Unit = done.set(true) })
-    sObs.setOnReadyHandler(drain)
-    drain.run()
+    def put(frame: Array[Byte]): Unit = { frames.put(frame); drain() }
+    val producer = new Thread(() => {
+      end = Some(
+        try {
+          put(Pb.writeFlightData(schemaHeaderBytes(schema), Array.emptyByteArray))
+          produce { m =>
+            val (header, body) = splitIpcMessage(m)
+            put(Pb.writeFlightData(header, body))
+          }
+          None
+        } catch { case t: Throwable => Some(t) })
+      drain()
+    }, "graft-flight-stream")
+    producer.setDaemon(true)
+    call.setOnCancelHandler(() => { closed = true; producer.interrupt() })
+    call.setOnReadyHandler(() => drain())
+    producer.start()
   }
 
   /** Cap for DoPut streams that CANNOT spill (parameter bindings and
@@ -439,28 +417,27 @@ object GraftFlightServer {
     def unimplemented(msg: String): grpc.StatusRuntimeException =
       grpc.Status.UNIMPLEMENTED.withDescription(msg).asRuntimeException()
 
-    /** Schema of a prepared statement WITHOUT executing it: pure queries
-      * analyze lazily; statements that parse to commands (or that only the
-      * graft extension parser accepts — they run eagerly when planned)
-      * report the empty schema, as do statements with unbound `?`
-      * parameter markers (their schema is knowable only at execution,
-      * once parameters are bound — the spec allows the empty dataset
-      * schema). GetFlightInfo/GetSchema on a prepared handle must never
-      * run the statement — only DoGet executes. */
-    def preparedSchemaIpc(session: SparkSession, sql: String): Array[Byte] =
+    /** A prepared statement analyzed WITHOUT executing it, for its
+      * dataset schema: None for statements that parse to commands (or
+      * that only the graft extension parser accepts — they run eagerly
+      * when planned) and for statements with unbound `?` parameter
+      * markers (their schema is knowable only at execution, once
+      * parameters are bound — the spec allows the empty dataset schema).
+      * Preparing, and GetFlightInfo/GetSchema on a prepared handle, must
+      * never run the statement — only DoGet executes. */
+    def analyzedOnly(session: SparkSession, sql: String): Option[DataFrame] =
       try {
         val parsed = session.sessionState.sqlParser.parsePlan(sql)
-        if (parsed.isInstanceOf[
-            org.apache.spark.sql.catalyst.plans.logical.Command])
-          schemaIpcBytes(new org.apache.arrow.vector.types.pojo.Schema(
-            java.util.List.of()))
-        else schemaIpcBytesOf(org.apache.spark.sql.graft.Bridge.ofRows(session, parsed))
+        if (parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command]) None
+        else Some(org.apache.spark.sql.graft.Bridge.ofRows(session, parsed))
       } catch {
         case _: org.apache.spark.sql.catalyst.parser.ParseException |
-             _: org.apache.spark.sql.AnalysisException =>
-          schemaIpcBytes(new org.apache.arrow.vector.types.pojo.Schema(
-            java.util.List.of()))
+             _: org.apache.spark.sql.AnalysisException => None
       }
+
+    def preparedSchemaIpc(session: SparkSession, sql: String): Array[Byte] =
+      analyzedOnly(session, sql).map(schemaIpcBytesOf).getOrElse(schemaIpcBytes(
+        new org.apache.arrow.vector.types.pojo.Schema(java.util.List.of())))
 
     /** Look up a prepared statement for the bound caller (owner check). */
     def preparedFor(session: SparkSession, handleBytes: Array[Byte])
@@ -469,10 +446,7 @@ object GraftFlightServer {
       val ps = GraftFlightSql.getPrepared(handle).getOrElse(
         throw notFound("flight sql: unknown prepared statement handle " +
           GraftFlightSql.expiryHint))
-      val caller = graft.auth.Privileges.principalOf(session).map(_.name)
-      if (ps.owner != caller)
-        throw unauthenticated(
-          "flight sql: prepared statement belongs to a different principal")
+      requireOwner(session, ps.owner, "flight sql: prepared statement")
       (handle, ps)
     }
 
@@ -516,12 +490,11 @@ object GraftFlightServer {
               obs.onCompleted()
             }
             def planStatement(sql: String, mkTicket: String => Array[Byte]): Unit = {
-              val session = root.newSession()
-              bindPrincipal(root, session)
-              val df = graft.Graft.sql(session, sql)
+              val s = session(root)
+              val df = graft.Graft.sql(s, sql)
               val ticket = java.util.UUID.randomUUID().toString
               pending.put(ticket, Pending(df,
-                graft.auth.Privileges.principalOf(session).map(_.name),
+                graft.auth.Privileges.principalOf(s).map(_.name),
                 System.currentTimeMillis()))
               reply(schemaIpcBytesOf(df), mkTicket(ticket))
             }
@@ -533,19 +506,16 @@ object GraftFlightServer {
                   PbSql.writeAny("TicketStatementQuery",
                     PbSql.writeTicketStatementQuery(PbSql.utf8(uuid))))
               case Some(("CommandPreparedStatementQuery", v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                val (_, ps) = preparedFor(session, PbSql.readHandle(v))
+                val s = session(root)
+                val (_, ps) = preparedFor(s, PbSql.readHandle(v))
                 // schema only — execution happens at DoGet, exactly once
-                reply(preparedSchemaIpc(session, ps.sql), desc.cmd)
+                reply(preparedSchemaIpc(s, ps.sql), desc.cmd)
               case Some(("CommandGetSqlInfo", v)) =>
-                bindPrincipal(root, root.newSession())
+                session(root)
                 val (schema, _) = GraftFlightSql.sqlInfoIpc(PbSql.readGetSqlInfo(v))
                 reply(schemaIpcBytes(schema), desc.cmd)
               case Some((kind, v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                catalogDf(session, kind, v) match {
+                catalogDf(session(root), kind, v) match {
                   case Some(df) => reply(schemaIpcBytesOf(df), desc.cmd)
                   case None => throw unimplemented(s"flight sql: $kind")
                 }
@@ -569,60 +539,35 @@ object GraftFlightServer {
             anyCmd match {
               case Some(("CommandStatementQuery", v)) =>
                 reply(schemaIpcBytesOf(
-                  statementOf(root, PbSql.readStatementQuery(v))))
+                  graft.Graft.sql(session(root), PbSql.readStatementQuery(v))))
               case Some(("CommandPreparedStatementQuery", v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                val (_, ps) = preparedFor(session, PbSql.readHandle(v))
-                reply(preparedSchemaIpc(session, ps.sql))
+                val s = session(root)
+                val (_, ps) = preparedFor(s, PbSql.readHandle(v))
+                reply(preparedSchemaIpc(s, ps.sql))
               case Some(("CommandGetSqlInfo", v)) =>
-                bindPrincipal(root, root.newSession())
+                session(root)
                 reply(schemaIpcBytes(
                   GraftFlightSql.sqlInfoIpc(PbSql.readGetSqlInfo(v))._1))
               case Some((kind, v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                catalogDf(session, kind, v) match {
+                catalogDf(session(root), kind, v) match {
                   case Some(df) => reply(schemaIpcBytesOf(df))
                   case None => throw unimplemented(s"flight sql: $kind")
                 }
-              case None => reply(schemaIpcBytesOf(statementOf(root, sqlOf(desc))))
+              case None => reply(schemaIpcBytesOf(graft.Graft.sql(session(root), sqlOf(desc))))
             }
           } catch { case t: Throwable => fail(obs, t) }
       })
 
-    /** Consume a stashed ad-hoc statement ticket: validate the caller
-      * BEFORE removing — a missing/invalid credential or the wrong
-      * principal must leave the submitted plan intact so the rightful
-      * owner's retry still finds it. */
-    def consumePending(tk: String): Option[DataFrame] =
-      pending.get(tk).map { p =>
-        val session = root.newSession()
-        bindPrincipal(root, session)
-        val caller = graft.auth.Privileges.principalOf(session).map(_.name)
-        if (p.owner != caller)
-          throw unauthenticated(
-            "flight: ticket was issued to a different principal")
-        // consume exactly once, only now that the caller is valid
-        if (!pending.remove(tk, p))
-          throw notFound("flight: ticket already consumed")
-        p.df
-      }
-
-    /** Revoke a stashed statement ticket for CancelQuery: same
-      * owner-before-removal discipline as [[consumePending]] — a caller
-      * can only cancel queries issued to them. Returns true when the
-      * ticket existed and was revoked. */
-    def cancelPending(tk: String): Boolean =
-      pending.get(tk).exists { p =>
-        val session = root.newSession()
-        bindPrincipal(root, session)
-        val caller = graft.auth.Privileges.principalOf(session).map(_.name)
-        if (p.owner != caller)
-          throw unauthenticated(
-            "flight: ticket was issued to a different principal")
+    /** Take a stashed ad-hoc statement ticket, exactly once, for DoGet or
+      * CancelQuery: the caller is validated BEFORE removal — a
+      * missing/invalid credential or the wrong principal leaves the
+      * submitted plan intact so the rightful owner's retry still finds
+      * it. None when no such ticket is stashed. */
+    def claimPending(tk: String): Option[DataFrame] =
+      pending.get(tk).filter { p =>
+        requireOwner(session(root), p.owner, "flight: ticket")
         pending.remove(tk, p)
-      }
+      }.map(_.df)
 
     val doGetHandler = ServerCalls.asyncServerStreamingCall(
       new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
@@ -633,21 +578,20 @@ object GraftFlightServer {
             PbSql.readAny(tkBytes) match {
               case Some(("TicketStatementQuery", v)) =>
                 val handle = new String(PbSql.readHandle(v), StandardCharsets.UTF_8)
-                val df = consumePending(handle).getOrElse(
+                val df = claimPending(handle).getOrElse(
                   throw notFound("flight sql: unknown or expired statement handle"))
                 streamResult(df, "flightDoGet", obs)
               case Some(("CommandPreparedStatementQuery", v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                val (_, ps) = preparedFor(session, PbSql.readHandle(v))
+                val s = session(root)
+                val (_, ps) = preparedFor(s, PbSql.readHandle(v))
                 // re-planned per execution: prepared statements are
                 // re-executable until closed, each run over current data.
                 // Parameters bound via DoPut substitute the statement's
                 // `?` markers positionally; they stay bound until the
                 // client re-binds (ADBC re-binds before each execute).
                 val df = ps.params.get() match {
-                  case Seq() => graft.Graft.sql(session, ps.sql)
-                  case Seq(row) => graft.Graft.sql(session, ps.sql, row)
+                  case Seq() => graft.Graft.sql(s, ps.sql)
+                  case Seq(row) => graft.Graft.sql(s, ps.sql, row)
                   case many => throw grpc.Status.INVALID_ARGUMENT
                     .withDescription(s"flight sql: a query execution binds " +
                       s"exactly one parameter row, got ${many.size} " +
@@ -656,21 +600,19 @@ object GraftFlightServer {
                 }
                 streamResult(df, "flightPreparedQuery", obs)
               case Some(("CommandGetSqlInfo", v)) =>
-                bindPrincipal(root, root.newSession())
+                session(root)
                 val (schema, batches) =
                   GraftFlightSql.sqlInfoIpc(PbSql.readGetSqlInfo(v))
                 streamIpc(schema, batches, obs)
               case Some((kind, v)) =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
-                catalogDf(session, kind, v) match {
+                catalogDf(session(root), kind, v) match {
                   case Some(df) => streamResult(df, "flightCatalogCmd", obs)
                   case None => throw unimplemented(s"flight sql: $kind")
                 }
               case None =>
                 val tk = new String(tkBytes, StandardCharsets.UTF_8)
-                val df = consumePending(tk)
-                  .getOrElse(statementOf(root, tk)) // stateless SQL-in-ticket
+                val df = claimPending(tk) // else stateless SQL-in-ticket
+                  .getOrElse(graft.Graft.sql(session(root), tk))
                 streamResult(df, "flightDoGet", obs)
             }
           } catch { case t: Throwable => fail(obs, t) }
@@ -688,8 +630,7 @@ object GraftFlightServer {
             val action = PbSql.readAction(req)
             action.tpe match {
               case "CreatePreparedStatement" =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
+                val s = session(root)
                 val sql = PbSql.readAny(action.body) match {
                   case Some(("ActionCreatePreparedStatementRequest", v)) =>
                     PbSql.readCreatePreparedRequest(v)
@@ -698,47 +639,30 @@ object GraftFlightServer {
                       "Any-wrapped ActionCreatePreparedStatementRequest")
                     .asRuntimeException()
                 }
-                // Preparation must NOT execute: pure queries are analyzed
-                // lazily for their dataset schema; statements the stock
-                // parser rejects or that parse to commands (DDL/DML — they
-                // would run eagerly if planned) report an empty dataset
-                // schema, which the spec allows for update-style
-                // statements.
+                // Preparation must NOT execute: the statement is analyzed
+                // only; one without a knowable schema reports an empty
+                // dataset schema, which the spec allows for update-style
+                // statements. The analysis is a history row of its own.
                 val t0 = System.nanoTime()
-                val schemaBytes =
-                  try {
-                    val parsed = session.sessionState.sqlParser.parsePlan(sql)
-                    if (parsed.isInstanceOf[
-                        org.apache.spark.sql.catalyst.plans.logical.Command])
-                      Array.emptyByteArray
-                    else {
-                      val df = org.apache.spark.sql.graft.Bridge.ofRows(session, parsed)
-                      graft.catalog.QueryHistory.record("flightPrepare",
-                        df.queryExecution, System.nanoTime() - t0, None)
-                      schemaIpcBytesOf(df)
-                    }
-                  } catch {
-                    case _: org.apache.spark.sql.catalyst.parser.ParseException =>
-                      Array.emptyByteArray // graft-extension statement
-                    case _: org.apache.spark.sql.AnalysisException =>
-                      Array.emptyByteArray // unbound `?` markers — schema at execution
-                  }
+                val schemaBytes = analyzedOnly(s, sql).map { df =>
+                  graft.catalog.QueryHistory.record("flightPrepare",
+                    df.queryExecution, System.nanoTime() - t0, None)
+                  schemaIpcBytesOf(df)
+                }.getOrElse(Array.emptyByteArray)
                 val handle = GraftFlightSql.createPrepared(sql,
-                  graft.auth.Privileges.principalOf(session).map(_.name))
+                  graft.auth.Privileges.principalOf(s).map(_.name))
                 obs.onNext(PbSql.writeResult(PbSql.writeAny(
                   "ActionCreatePreparedStatementResult",
                   PbSql.writeCreatePreparedResult(PbSql.utf8(handle),
                     schemaBytes, Array.emptyByteArray))))
                 obs.onCompleted()
               case "ClosePreparedStatement" =>
-                val session = root.newSession()
-                bindPrincipal(root, session)
                 val handleBytes = PbSql.readAny(action.body) match {
                   case Some(("ActionClosePreparedStatementRequest", v)) =>
                     PbSql.readHandle(v)
                   case _ => PbSql.readHandle(action.body) // tolerate unwrapped
                 }
-                val (handle, _) = preparedFor(session, handleBytes)
+                val (handle, _) = preparedFor(session(root), handleBytes)
                 GraftFlightSql.closePrepared(handle)
                 obs.onCompleted()
               case "CancelQuery" =>
@@ -761,7 +685,7 @@ object GraftFlightServer {
                     case Some(_) => "" // stateless command ticket — nothing queued
                     case None => new String(tkBytes, StandardCharsets.UTF_8)
                   }
-                  uuid.nonEmpty && cancelPending(uuid)
+                  uuid.nonEmpty && claimPending(uuid).isDefined
                 }
                 val status = if (revoked.contains(true)) 1 else 3
                 obs.onNext(PbSql.writeResult(PbSql.writeAny(
@@ -850,8 +774,7 @@ object GraftFlightServer {
                 val d = desc.getOrElse(throw grpc.Status.INVALID_ARGUMENT
                   .withDescription("flight: DoPut stream carried no descriptor")
                   .asRuntimeException())
-                val session = root.newSession()
-                bindPrincipal(root, session)
+                val session = GraftFlightServer.session(root)
                 val anyCmd = if (d.descType == 2) PbSql.readAny(d.cmd) else None
                 // decode uploaded Arrow batches into local parameter rows
                 // (small by contract — parameter bindings, not data)
@@ -861,18 +784,6 @@ object GraftFlightServer {
                     .dataFrameFromIPCStream(session, chunks.iterator)
                     .collect().toSeq
                     .map(r => Array.tabulate[Any](r.length)(r.get))
-                def preparedOf(v: Array[Byte]): GraftFlightSql.Prepared = {
-                  val ps = GraftFlightSql.getPrepared(
-                    new String(PbSql.readHandle(v), StandardCharsets.UTF_8))
-                    .getOrElse(throw grpc.Status.NOT_FOUND.withDescription(
-                      "flight sql: unknown prepared statement handle " +
-                        GraftFlightSql.expiryHint).asRuntimeException())
-                  val caller = graft.auth.Privileges.principalOf(session).map(_.name)
-                  if (ps.owner != caller)
-                    throw unauthenticated("flight sql: prepared statement " +
-                      "belongs to a different principal")
-                  ps
-                }
                 anyCmd match {
                   // Flight SQL update path (ADBC's DML shape): the command
                   // IS the work. Eager commands execute here (and are
@@ -884,7 +795,7 @@ object GraftFlightServer {
                       PbSql.writeDoPutUpdateResult(-1L)))
                     obs.onCompleted()
                   case Some(("CommandPreparedStatementUpdate", v)) =>
-                    val ps = preparedOf(v)
+                    val (_, ps) = preparedFor(session, PbSql.readHandle(v))
                     // batch semantics: with bound rows, the statement runs
                     // once per row (ADBC executemany); with none, once
                     paramRows() match {
@@ -899,7 +810,7 @@ object GraftFlightServer {
                   // rows become the handle's positional `?` bindings,
                   // consumed by subsequent DoGet executions
                   case Some(("CommandPreparedStatementQuery", v)) =>
-                    val ps = preparedOf(v)
+                    val (_, ps) = preparedFor(session, PbSql.readHandle(v))
                     val rows = paramRows()
                     if (rows.isEmpty)
                       throw grpc.Status.INVALID_ARGUMENT.withDescription(
@@ -947,7 +858,8 @@ object GraftFlightServer {
           // onCompleted. A Basic header that fails to mint is refused
           // loudly there.
           val header = CtxAuth.get()
-          val isBasic = header != null && header.regionMatches(true, 0, "Basic ", 0, 6)
+          val isBasic = header != null && graft.server.Statements.isBasic(header)
+          val bearer = CtxBearer.get()
           new StreamObserver[Array[Byte]] {
             private var responded = false
             private def respond(payload: Array[Byte]): Unit = {
@@ -959,15 +871,16 @@ object GraftFlightServer {
               // the minted token rides back in the response payload
               val viaPayload = Pb.readBasicAuth(Pb.readHandshakePayload(req))
                 .flatMap { case (u, p) =>
-                  try Some(graft.auth.Privileges.login(root.newSession(), u, p))
-                  catch { case _: SecurityException => None }
+                  graft.server.Statements.open(root, graft.server.Statements
+                    .Credentials(None, Some(u), Some(p)), required = false)
+                    .toOption.flatMap(_.bearer)
                 }
               respond(viaPayload.map(_.getBytes(StandardCharsets.UTF_8))
                 .getOrElse(Array.emptyByteArray))
             }
             override def onError(t: Throwable): Unit = ()
             override def onCompleted(): Unit = {
-              if (isBasic && mintBearer(root, header).isEmpty)
+              if (isBasic && bearer.isEmpty)
                 obs.onError(unauthenticated("flight: invalid basic credentials"))
               else {
                 // a response message forces initial metadata (the bearer
@@ -992,9 +905,7 @@ object GraftFlightServer {
       new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
         override def invoke(req: Array[Byte], obs: StreamObserver[Array[Byte]]): Unit =
           try {
-            val session = root.newSession()
-            bindPrincipal(root, session)
-            val principal = graft.auth.Privileges.principalOf(session)
+            val principal = graft.auth.Privileges.principalOf(session(root))
             val granted = root.catalog.listTables().collect()
               .filter(t => graft.auth.Privileges.visible(principal, t.name))
             val listed = granted.take(500)
@@ -1049,9 +960,9 @@ object GraftFlightServer {
   }
 
   /** Captures the authorization header into the call context; on
-    * Handshake, valid Basic credentials are exchanged for a bearer token
-    * returned in the response headers (the `authenticate_basic_token`
-    * contract). */
+    * Handshake, valid Basic credentials are exchanged (once, by the shared
+    * opener) for a bearer token returned in the response headers (the
+    * `authenticate_basic_token` contract). */
   private final class AuthInterceptor(root: SparkSession) extends grpc.ServerInterceptor {
     override def interceptCall[Req, Resp](
         call: grpc.ServerCall[Req, Resp], headers: grpc.Metadata,
@@ -1059,12 +970,16 @@ object GraftFlightServer {
       val auth = headers.get(AuthHeader)
       val isHandshake =
         call.getMethodDescriptor.getFullMethodName == s"$ServiceName/Handshake"
+      val bearer =
+        if (!isHandshake || auth == null || !graft.server.Statements.isBasic(auth)) None
+        else graft.server.Statements.open(root,
+          graft.server.Statements.Credentials(Some(auth)), required = false)
+          .toOption.flatMap(_.bearer)
       val wrapped =
         if (!isHandshake || auth == null) call
         else new grpc.ForwardingServerCall.SimpleForwardingServerCall[Req, Resp](call) {
           // clients read the minted token from initial OR trailing
           // metadata — attach to both so a trailers-only path still works
-          private lazy val bearer = mintBearer(root, auth)
           override def sendHeaders(h: grpc.Metadata): Unit = {
             bearer.foreach(tok => h.put(AuthHeader, s"Bearer $tok"))
             super.sendHeaders(h)
@@ -1076,7 +991,8 @@ object GraftFlightServer {
           }
         }
       grpc.Contexts.interceptCall(
-        grpc.Context.current().withValue(CtxAuth, auth), wrapped, headers, next)
+        grpc.Context.current().withValue(CtxAuth, auth).withValue(CtxBearer, bearer),
+        wrapped, headers, next)
     }
   }
 

@@ -99,30 +99,46 @@ object Bridge {
       enc.asInstanceOf[org.apache.spark.sql.Encoder[org.apache.spark.sql.Row]])
   }
 
+  /** Run the statement's own physical plan once inside one SQL execution,
+    * as `Dataset.withAction` runs an action: metrics reset first (a re-run
+    * plan-cache hit does not add to the last run's), internal errors
+    * wrapped as Spark wraps them. Every job `run` starts carries the
+    * execution's id, so the running-statement ledger attributes, cancels
+    * and retires the statement. The execution is named `action`, so the
+    * session's QueryExecutionListeners (query history) see it, unless the
+    * statement is an eager command's result: that ran, and was recorded,
+    * when it was built (`QueryExecution.withInternalError` is
+    * `private[sql]`). */
+  private def runOnce[T](qe: org.apache.spark.sql.execution.QueryExecution, action: String)
+                        (run: org.apache.spark.sql.execution.SparkPlan => T): T = {
+    import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+    val name = if (qe.commandExecuted.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.CommandResult]) None else Some(action)
+    SQLExecution.withNewExecutionId(qe, name) {
+      QueryExecution.withInternalError(s"""The "$action" action failed.""") {
+        val plan = qe.executedPlan
+        plan.resetMetrics()
+        run(plan)
+      }
+    }
+  }
+
   /** The first `n` rows of `df` as the JSON objects
-    * `df.limit(n).toJSON.collect()` returns, from one run of the
-    * statement's own physical plan: `executeTake(n)` inside one SQL
-    * execution, as `Dataset.withAction` runs an action (metrics reset
-    * first, so a re-run plan-cache hit does not add to the last run's),
-    * rendered with the generator and options `Dataset.toJSON` uses. No
-    * second Dataset is built, so a plan-cache hit is not re-analyzed,
-    * re-optimized, re-planned or re-code-generated (`Dataset`,
-    * `JacksonGenerator` and `QueryExecution.withInternalError` are
+    * `df.limit(n).toJSON.collect()` returns, from one [[runOnce]] of the
+    * statement's own plan (`executeTake(n)`), rendered with the generator
+    * and options `Dataset.toJSON` uses. No second Dataset is built, so a
+    * plan-cache hit is not re-analyzed, re-optimized, re-planned or
+    * re-code-generated (`Dataset` and `JacksonGenerator` are
     * `private[sql]`). A result that cannot exceed `n` rows (`LIMIT k`
     * with k ≤ n, `ORDER BY … LIMIT k`, a global aggregate) is collected
     * whole instead: the limit operators implement only `executeCollect`,
     * and `executeTake` would shuffle them into one partition first. */
   def takeJson(df: org.apache.spark.sql.DataFrame, n: Int): Array[String] = {
     import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
-    import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val qe = ds.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      QueryExecution.withInternalError("""The "collect" action failed.""") {
-        val plan = qe.executedPlan
-        plan.resetMetrics()
-        if (qe.optimizedPlan.maxRows.exists(_ <= n)) plan.executeCollect() else plan.executeTake(n)
-      }
+    val rows = runOnce(qe, "collect") { plan =>
+      if (qe.optimizedPlan.maxRows.exists(_ <= n)) plan.executeCollect() else plan.executeTake(n)
     }
     val writer = new java.io.CharArrayWriter()
     val gen = new JacksonGenerator(ds.exprEnc.schema, writer, new JSONOptions(
@@ -133,6 +149,40 @@ object Bridge {
       gen.flush()
       writer.toString
     } finally gen.close()
+  }
+
+  /** The result of `df` as encapsulated Arrow IPC RecordBatch messages
+    * ([continuation][len][flatbuffer][body] framing), handed to `emit` in
+    * result order from one [[runOnce]] of the statement's own plan named
+    * `action`. The executors build the batches (`Dataset.toArrowBatchRdd`
+    * is `private[sql]`); one job per partition brings them to the driver,
+    * so it holds one partition's batches at a time, never the result. */
+  def runArrow(df: org.apache.spark.sql.DataFrame, action: String)
+              (emit: Array[Byte] => Unit): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    runOnce(ds.queryExecution, action) { plan =>
+      val batches = ds.toArrowBatchRdd(plan)
+      (0 until batches.getNumPartitions).foreach { p =>
+        batches.sparkContext.runJob(batches, (it: Iterator[Array[Byte]]) => it.toArray, Seq(p))
+          .foreach(_.foreach(emit))
+      }
+    }
+  }
+
+  /** `df.createOrReplaceTempView(name)` without running it as a command:
+    * the same view relation lands in the session catalog, but no SQL
+    * execution starts, so a registration repeated per request leaves no
+    * query-history row (`ViewHelper` and `sessionState` are
+    * `private[sql]`). */
+  def replaceTempView(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    val catalog = ds.sparkSession.sessionState.catalog
+    val plan = ds.queryExecution.analyzed
+    catalog.createTempView(name,
+      org.apache.spark.sql.execution.command.ViewHelper.createTemporaryViewRelation(
+        org.apache.spark.sql.catalyst.TableIdentifier(name), ds.sparkSession, true,
+        catalog.getRawTempView, None, plan, plan, Nil),
+      overrideIfExists = true)
   }
 
   /** Session Hadoop configuration (sessionState is `private[sql]`). */
@@ -199,7 +249,7 @@ object Bridge {
   /** Arrow schema of a DataFrame's result, using the session's timezone
     * and large-var-types settings (both `private[sql]` conf entries) so
     * the schema agrees bit-for-bit with the batches
-    * [[arrowBatches]] produces. */
+    * [[runArrow]] produces. */
   def arrowSchema(df: org.apache.spark.sql.DataFrame)
       : org.apache.arrow.vector.types.pojo.Schema = {
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
@@ -209,17 +259,7 @@ object Bridge {
       errorOnDuplicatedFieldNames = true, largeVarTypes = conf.arrowUseLargeVarTypes)
   }
 
-  /** Result of a DataFrame as encapsulated Arrow IPC RecordBatch
-    * messages ([continuation][len][flatbuffer][body] framing), one
-    * element per produced batch, streamed partition-by-partition
-    * (`Dataset.toArrowBatchRdd` is `private[sql]`). This is the columnar
-    * result path a wire protocol serves without ever materializing rows
-    * on the driver. */
-  def arrowBatches(df: org.apache.spark.sql.DataFrame): Iterator[Array[Byte]] =
-    df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-      .toArrowBatchRdd.toLocalIterator
-
-  /** Inverse of [[arrowBatches]]: decode an Arrow IPC stream (framed
+  /** Inverse of [[runArrow]]: decode an Arrow IPC stream (framed
     * schema + record-batch messages, in chunks) into a local DataFrame
     * (`ArrowConverters.fromIPCStream` is `private[sql]`). The rows
     * materialize on the driver — the same contract as Spark Connect's

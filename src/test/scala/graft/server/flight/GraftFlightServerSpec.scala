@@ -74,7 +74,9 @@ class GraftFlightServerSpec extends AnyFunSuite {
   test("IPC message framing splits into (flatbuffer header, body)") {
     import org.apache.spark.sql.functions._
     val df = spark.range(100).select(col("id"), (col("id") * 2).as("v"))
-    val batches = org.apache.spark.sql.graft.Bridge.arrowBatches(df).toVector
+    val out = Vector.newBuilder[Array[Byte]]
+    org.apache.spark.sql.graft.Bridge.runArrow(df, "collectArrow")(out += _)
+    val batches = out.result()
     assert(batches.nonEmpty)
     batches.foreach { b =>
       val (header, body) = GraftFlightServer.splitIpcMessage(b)
