@@ -30,6 +30,7 @@ object Bench {
     // bench record, and WARN-level chatter (function re-registration, Hive
     // metastore probes) otherwise lands after/around it in the captured tail.
     spark.sparkContext.setLogLevel("ERROR")
+    graft.engine.GraftSession.shareTaskClassLoader(spark)
     graft.functions.Functions.registerAll(spark)
     // Warm the JVM/codegen paths once so per-query numbers measure the
     // query, not first-touch class loading — through the SAME noop sink the

@@ -18,6 +18,7 @@ object Verify {
         .config("spark.ui.enabled", "false")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.engine.GraftSession.shareTaskClassLoader(spark)
     graft.functions.Functions.registerAll(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

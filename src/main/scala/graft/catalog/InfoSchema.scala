@@ -276,6 +276,29 @@ object InfoSchema {
       () => graft.accel.PlanCache.listEntries
         .map(e => Row(e.fingerprint, e.statement, e.hits, e.lakeDeps)))
 
+  /** sys.codegen: the process-wide janino ledger, one row — classes
+    * compiled (`CodegenMetrics` compilation count), their total compile
+    * time (`CodeGenerator.compileTime`, exact), the mean bytecode size of
+    * a generated class (`CodegenMetrics`, over Spark's time-decayed
+    * sample) and the codegen cache's capacity (the static
+    * `spark.sql.codegen.cache.maxEntries`). Read it before and after a
+    * slow statement: a risen `compiles` means the statement paid janino
+    * time instead of reusing cached classes. */
+  def sysCodegen(spark: SparkSession): DataFrame =
+    live(spark, StructType(Seq(
+      StructField("compiles", LongType, nullable = false),
+      StructField("compile_ms", DoubleType, nullable = false),
+      StructField("generated_class_bytes", LongType, nullable = false),
+      StructField("cache_capacity", IntegerType, nullable = false))),
+      () => {
+        import org.apache.spark.metrics.source.CodegenMetrics
+        Seq(Row(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6,
+          math.round(CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getSnapshot.getMean),
+          spark.conf.get(org.apache.spark.sql.internal.StaticSQLConf
+            .CODEGEN_CACHE_MAX_ENTRIES.key).toInt))
+      })
+
   /** sys.file_metadata: the schema cache of path-qualified file tables
     * (reference metadata-refresh state, `exec/store/metadatarefresh/`) —
     * one row per (format, path, options, session conf) entry with the
@@ -721,6 +744,7 @@ object InfoSchema {
     sysRunningQueries(spark).createOrReplaceTempView("sys_running_queries")
     sysResultCache(spark).createOrReplaceTempView("sys_result_cache")
     sysPlanCache(spark).createOrReplaceTempView("sys_plan_cache")
+    sysCodegen(spark).createOrReplaceTempView("sys_codegen")
     sysFileMetadata(spark).createOrReplaceTempView("sys_file_metadata")
     sysPreparedStatements(spark).createOrReplaceTempView("sys_prepared_statements")
     sysRoutingRules(spark).createOrReplaceTempView("sys_routing_rules")

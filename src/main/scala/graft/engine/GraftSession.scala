@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
@@ -49,6 +51,9 @@ object GraftSession {
            |launch must pass them — see scripts/run-main.sh).""".stripMargin)
     }
   }
+
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session. */
+  val CodegenCacheEntries = 1000
 
   /** Common config applied to every session (Verify, Bench, tests, REPL). */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
@@ -113,6 +118,14 @@ object GraftSession {
     // (many micro-batches under AvailableNow)
     .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
     .config("spark.sql.ui.explainMode", "formatted")
+    // Compile each generated class once per process: the warm working set
+    // of a repeated multi-query workload is ~120 classes (olap_batch), over
+    // Spark's default of 100, so every pass evicted and re-compiled ~76 of
+    // them. An entry pins its classes and their janino loader in metaspace,
+    // ~62 KB measured for a join + aggregate stage (SCALING.md), so 1000
+    // entries bound the cache at ~62 MB. Static conf: read once, when
+    // Spark's CodeGenerator object first initialises.
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     // Jobs service is wire-first (reference LocalJobsService): EVERY
     // session over this context — Thrift, Connect, REST, Flight clones
     // included — instantiates the history listener at creation, so their
@@ -131,6 +144,7 @@ object GraftSession {
         .config("spark.ui.enabled", "false")
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    shareTaskClassLoader(s)
     graft.functions.Functions.registerAll(s)
     graft.catalog.QueryHistory.install(s)
     // Reload the durable control plane BEFORE anything serves: users/
@@ -140,5 +154,38 @@ object GraftSession {
     // same way at coordinator start (services/datastore).
     graft.catalog.GraftStore.loadAll(s)
     s
+  }
+
+  // The capture task writes its thread's loader here: a local executor
+  // shares the driver's JVM.
+  private val taskLoader = new AtomicReference[ClassLoader]()
+
+  /** Give driver threads the class loader local task threads run under.
+    *
+    * Spark's codegen cache keys each class by (context class loader,
+    * source). A local executor runs its tasks under its own
+    * `MutableURLClassLoader` over the same class path, so a stage that
+    * `WholeStageCodegenExec` compiles on a driver thread (its fallback
+    * check) was compiled again, identical, on the task thread. Installing
+    * the task loader on the thread that opened the session — whose later
+    * threads (AQE exchange pools, REST and Flight pools) inherit it —
+    * makes both compiles one cache entry.
+    *
+    * Only in local mode, and only when that loader delegates to the
+    * opener's current one, so every class the opener resolved still
+    * resolves the same; otherwise the thread is left as it is. Cluster
+    * executors are other JVMs: their compiles never shared the driver's
+    * cache. Call once, right after `getOrCreate`, on the opening thread. */
+  def shareTaskClassLoader(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (sc.isLocal) {
+      sc.runJob(sc.parallelize(Seq(0), 1),
+        (_: Iterator[Int]) => taskLoader.set(Thread.currentThread.getContextClassLoader))
+      val loader = taskLoader.getAndSet(null)
+      val opener = Thread.currentThread
+      if (Iterator.iterate(loader)(_.getParent).takeWhile(_ != null)
+          .contains(opener.getContextClassLoader))
+        opener.setContextClassLoader(loader)
+    }
   }
 }
