@@ -10,12 +10,13 @@ import scala.util.control.NonFatal
   * partitioning from the input layout instead of trusting it).
   *
   * Problem: Spark fuses map-side work into the scan stage, and a scan's
-  * parallelism is bounded by the source's ROW-GROUP layout — a parquet
-  * file written as one row group can never be read by more than one task,
-  * no matter what `maxPartitionBytes`/`minPartitionNum` say. The heavy
-  * per-row operators (MinHash/SimHash signing, PQ encoding, tokenization,
-  * feature hashing) then run their entire map phase on ONE core while the
-  * rest of the machine idles.
+  * parallelism is bounded by its byte split count: a file below
+  * `spark.sql.files.maxPartitionBytes`/`openCostInBytes` is one split, read
+  * by one task (a row group that spans splits is read by all of them, a
+  * row range each: `sources.RowSlices`). The heavy per-row operators
+  * (MinHash/SimHash signing, PQ encoding, tokenization, feature hashing)
+  * over a small input then run their entire map phase on ONE core while
+  * the rest of the machine idles.
   *
   * Fix: when (and only when) the scan's split count is below the session's
   * default parallelism, insert ONE round-robin exchange of the scanned

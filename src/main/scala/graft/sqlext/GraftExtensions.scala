@@ -50,6 +50,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(session => new graft.plans.CategoricalSelectivity(session))
     e.injectOptimizerRule(session => new graft.plans.ApproxCountDistinct(session))
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    // Parquet row groups that span byte splits are read by all of them,
+    // a row range each (physical plans only)
+    e.injectColumnar(_ => graft.sources.RowSlices.Install)
     // Lake metadata table functions — the reference's TABLE(table_files(..))
     // / table_history / table_snapshot family (dremio `TableMacroNames.java`,
     // `sys."tables"`): FROM-clause functions over the commit log, joinable

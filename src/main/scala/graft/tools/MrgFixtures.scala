@@ -4,11 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev utility for the optimization rounds (r16 verdict item 1): derive a
   * MULTI-ROW-GROUP copy of a fixture directory so the bench can measure
-  * scan parallelism. The driver's sf0.1 fixtures are single-row-group
-  * parquet, so every scan is one task and 8-core vs 32-core per-query
-  * ratios sit at ~1 regardless of the plan — the measurement instrument,
-  * not the engine, is the bottleneck. The driver's own `/root/testdata` is
-  * read-only by contract (TESTDATA.md), so this writes a SIBLING directory
+  * scan parallelism. The sf0.1 fixtures are single-row-group
+  * parquet files of at most ~11 MB: row-range slicing
+  * (`sources.RowSlices`) reads each by as many tasks as it has byte splits
+  * (3 for lineitem at the default 4 MB floor, 1 for every file under it),
+  * far below 32, so 8-core vs 32-core per-query ratios still sit near 1
+  * regardless of the plan — the measurement instrument, not the engine,
+  * is the bottleneck.
+  * The fixture directory itself is read-only by contract (TESTDATA.md), so this writes a SIBLING directory
   * for local A/B only; `graft.Bench` takes it via `$SPARK_GRAFT_SF_DIR`
   * (the bench contract is unchanged).
   *
