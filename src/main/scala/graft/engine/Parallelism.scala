@@ -12,8 +12,8 @@ import scala.util.control.NonFatal
   * Problem: Spark fuses map-side work into the scan stage, and a scan's
   * parallelism is bounded by its byte split count: a file below
   * `spark.sql.files.maxPartitionBytes`/`openCostInBytes` is one split, read
-  * by one task (a row group that spans splits is read by all of them, a
-  * row range each: `sources.RowSlices`). The heavy per-row operators
+  * by one task (a row group larger than a split is read by as many tasks
+  * as it covers splits, a row range each: `sources.RowSlices`). The heavy per-row operators
   * (MinHash/SimHash signing, PQ encoding, tokenization, feature hashing)
   * over a small input then run their entire map phase on ONE core while
   * the rest of the machine idles.

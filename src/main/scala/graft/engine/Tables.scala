@@ -46,26 +46,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private[engine] val lastRegistered =
-    scala.collection.concurrent.TrieMap.empty[Int, (String, Tables)]
+  private val lastRegistered =
+    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Tables)]
 
   /** Register every fixture table as a temp view + register graft functions.
     * Cached per session while the dir is unchanged: registering re-reads
     * every parquet footer, which would otherwise tax each `spark.sql`
-    * query. Switching dirs re-registers (views are session-global). The
-    * key is an identity hash, which two sessions can share, so a hit must
-    * also be this very session's entry.
+    * query. Switching dirs re-registers (views are session-global). Keyed
+    * by the session itself (identity equality), so no two sessions can
+    * share an entry.
     */
-  def ensure(spark: SparkSession, dir: String): Tables = {
-    val key = System.identityHashCode(spark)
-    lastRegistered.get(key) match {
-      case Some((d, t)) if d == dir && (t.spark eq spark) => t
+  def ensure(spark: SparkSession, dir: String): Tables =
+    lastRegistered.get(spark) match {
+      case Some((d, t)) if d == dir => t
       case _ =>
         val t = Tables(spark, dir)
         names.foreach(n => t.table(n).createOrReplaceTempView(n))
         graft.functions.Functions.registerAll(spark)
-        lastRegistered.put(key, (dir, t))
+        lastRegistered.put(spark, (dir, t))
         t
     }
-  }
 }

@@ -10,22 +10,27 @@ import org.apache.spark.sql.SparkSession
   * (3 for lineitem at the default 4 MB floor, 1 for every file under it),
   * far below 32, so 8-core vs 32-core per-query ratios still sit near 1
   * regardless of the plan — the measurement instrument, not the engine,
-  * is the bottleneck.
-  * The fixture directory itself is read-only by contract (TESTDATA.md), so this writes a SIBLING directory
-  * for local A/B only; `graft.Bench` takes it via `$SPARK_GRAFT_SF_DIR`
+  * is the bottleneck. With a row-group size (`parquet.block.size`, in
+  * bytes) and few files, the copy instead has several row groups per file,
+  * not aligned to Spark's byte splits: groups that straddle a split
+  * boundary, which slicing leaves whole unless a group exceeds 1.5
+  * splits.
+  * The fixture directory itself is read-only by contract (TESTDATA.md), so
+  * this writes a SIBLING directory for local A/B only; `graft.Bench` takes it via `$SPARK_GRAFT_SF_DIR`
   * (the bench contract is unchanged).
   *
   * Row CONTENT is identical (same rows, re-sharded); row ORDER is not
   * guaranteed across files, which is fine for timing runs (the oracle gate
   * keeps running against the driver fixtures).
   *
-  * Usage: runMain graft.tools.MrgFixtures <srcDir> <dstDir> [files=32]
+  * Usage: runMain graft.tools.MrgFixtures <srcDir> <dstDir> [files=32] [rowGroupBytes]
   */
 object MrgFixtures {
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 32
+    val groupBytes = args.lift(3)
     val spark = SparkSession.builder()
       .master("local[8]")
       .appName("mrg-fixtures")
@@ -35,8 +40,8 @@ object MrgFixtures {
     graft.engine.Tables.names.foreach { n =>
       val in = s"$src/$n.parquet"
       val df = spark.read.parquet(in)
-      df.repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$dst/$n.parquet")
+      val w = df.repartition(nFiles).write.mode("overwrite")
+      groupBytes.fold(w)(w.option("parquet.block.size", _)).parquet(s"$dst/$n.parquet")
       val rows = spark.read.parquet(s"$dst/$n.parquet").count()
       val orig = spark.read.parquet(in).count()
       require(rows == orig, s"$n: $rows rows after reshard, expected $orig")

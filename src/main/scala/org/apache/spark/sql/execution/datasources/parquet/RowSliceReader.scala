@@ -11,9 +11,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.filter2.columnindex.RowRanges
 import org.apache.parquet.io.SeekableInputStream
 
-import org.apache.spark.TaskContext
-import org.apache.spark.util.AccumulatorV2
-
 /** Spark's vectorized parquet reader over chosen row ranges of chosen row
   * groups (see `graft.sources.RowSlices`, which plans the ranges).
   *
@@ -48,11 +45,6 @@ class RowSliceReader(
     rows.setRequestedSchema(requestedSchema)
     reader = new RowSliceReader.Groups(rows, slices)
     totalRowCount = slices.map(_._2.rowCount).sum
-    // the scan's "number of row groups read", as Spark's reader reports it
-    Option(TaskContext.get()).foreach(_.taskMetrics().withExternalAccums { accs =>
-      accs.lastOption.filter(_.getClass.getSimpleName == "NumRowGroupsAcc")
-        .foreach(_.asInstanceOf[AccumulatorV2[Integer, Integer]].add(slices.size))
-    })
   }
 }
 

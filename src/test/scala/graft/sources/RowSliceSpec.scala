@@ -25,8 +25,9 @@ import graft.TestSpark
   *
   * Each case writes parquet files, reads them once with the default split
   * size (each file in one split: Spark's stock reader) and once with
-  * `spark.sql.files.maxPartitionBytes` forced small, so row groups span
-  * splits and are read by row range. The rows must be the same multiset,
+  * `spark.sql.files.maxPartitionBytes` forced small, so row groups larger
+  * than a split are read by row range and the others whole, each by the
+  * split that holds its midpoint. The rows must be the same multiset,
   * and each split must return the rows of a file in file order. Files are
   * written by Spark (with a page index) and by pyarrow through `python3`,
   * the way the fixtures are (no page index, so the offset index is built
@@ -104,18 +105,33 @@ class RowSliceSpec extends AnyFunSuite {
       n <- Gen.choose(0L, 5000000L)
       gs <- Gen.choose(4L, 1L << 40)
       len <- Gen.choose(1L, 1L << 34)
-      split <- Gen.choose(1L, 1L << 30)
+      split <- Gen.oneOf(Gen.choose(1L, 1L << 30), Gen.choose(len / 8 + 1, len * 2))
     } yield (n, gs, gs + len, split)
     samples(gen, 300, 11L).foreach { case (n, gs, ge, split) =>
       val first = gs / split
       val last = (ge - 1) / split
-      val slices = (first to last).map(i => RowSlices.slice(n, gs, ge, i * split, (i + 1) * split))
+      val slices = (first to last).map(i =>
+        RowSlices.slice(n, gs, ge, i * split, (i + 1) * split, split))
       assert(slices.head._1 == 0 && slices.last._2 == n)
       slices.sliding(2).filter(_.size == 2).foreach(p => assert(p(0)._2 == p(1)._1))
       assert(slices.forall { case (a, b) => a <= b })
+      // a group no larger than 1.5 splits goes whole to the split holding
+      // its midpoint: Spark's own rule
+      if ((ge - gs) * 2 < split * 3) {
+        val mid = gs + (ge - gs) / 2
+        assert(slices.zip(first to last).forall { case ((a, b), i) =>
+          (a, b) == (if (i * split <= mid && mid < (i + 1) * split) (0L, n) else (b, b))
+        })
+      }
     }
     // a group inside one split is that split's whole
-    assert(RowSlices.slice(100, 10, 20, 0, 64) == (0, 100))
+    assert(RowSlices.slice(100, 10, 20, 0, 64, 64) == (0, 100))
+    // a group of 2.7 splits is cut in 3 equal parts, one per split it covers
+    val parts = (0 until 4).map(i => RowSlices.slice(600, 0, 2700, i * 1000, (i + 1) * 1000, 1000))
+    assert(parts == Seq((0, 200), (200, 400), (400, 600), (600, 600)))
+    // one that just straddles a boundary is not cut
+    assert(RowSlices.slice(600, 0, 1100, 0, 1000, 1000) == (0, 600))
+    assert(RowSlices.slice(600, 0, 1100, 1000, 2000, 1000) == (600, 600))
   }
 
   // flat column kinds: a type and a generator of its values
@@ -257,6 +273,23 @@ class RowSliceSpec extends AnyFunSuite {
     }
   }
 
+  test("pushed filters skip the same pages sliced as whole (column indexes)") {
+    val dir = scratch("pages")
+    spark.range(0, 200000).select(col("id").as("seq"), (col("id") * 7 % 1000).as("v"))
+      .coalesce(1).write.option("parquet.block.size", (1024 * 1024).toString)
+      .option("parquet.page.row.count.limit", "1000").mode("overwrite").parquet(dir)
+    val split = fileSizes(dir).max / 5
+    def read(bytes: String) = withConf("spark.sql.files.maxPartitionBytes" -> bytes) {
+      readingTasks(spark.read.parquet(dir).where("seq >= 50000 AND seq < 60000")
+        .agg(sum("v")).collect())
+    }
+    val (_, whole) = read("128MB")
+    val (tasks, sliced) = read(split.toString)
+    assert(whole < 20000, s"Spark's reader read $whole rows; its pages were not skipped")
+    assert(sliced == whole, s"sliced reads took $sliced rows, Spark's reader $whole")
+    assert(tasks >= 1)
+  }
+
   test("a one-row-group file spanning k >= 3 byte splits is read by k tasks") {
     assume(pyarrow, "python3 with pyarrow not available")
     val dir = scratch("pin")
@@ -280,8 +313,8 @@ class RowSliceSpec extends AnyFunSuite {
     val split = (ge - gs) / 4
     val size = Files.size(java.nio.file.Paths.get(file))
     val k = (0L until size by split).count { s =>
-      val (a, b) = RowSlices.slice(group.getRowCount, gs, ge, s, s + split)
-      s < ge && s + split > gs && b > a
+      val (a, b) = RowSlices.slice(group.getRowCount, gs, ge, s, s + split, split)
+      b > a
     }
     assert(k >= 3)
     val (tasks, records) = withConf("spark.sql.files.maxPartitionBytes" -> split.toString) {
